@@ -18,22 +18,18 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from pysearch import build as pbuild
 from pysearch import exec as pexec
 from pysearch import oracle_sql as osql
 from pysearch import phrase as pphrase
-
-_INDEX_CACHE: dict[str, object] = {}
+from pysearch import store as pstore
 
 
 def _index_for(spark: SparkSession, sf_dir: str):
-    """The committed disk-backed segment for sf_dir (pysearch.store):
-    docs/postings/term_stats/positions as bucket-partitioned parquet —
-    every query key reads the SAME persisted store the build writes
-    (r05 brief item 4: one positions store, not a tempdir twin), and
-    selective queries take the driver-side pyarrow fast path."""
-    from pysearch import store as pstore
-
+    """The committed disk-backed content segment for sf_dir (the
+    pysearch.store catalog): docs/postings/term_stats/positions as
+    bucket-partitioned parquet — every query key reads the SAME
+    persisted store the build writes, and selective queries take the
+    driver-side pyarrow fast path."""
     return pstore.segment_index(spark, sf_dir)
 
 
@@ -182,13 +178,8 @@ def _tree_query(make_node, k: int):
 
 
 def _field_indexes_for(spark: SparkSession, sf_dir: str):
-    key = sf_dir.rstrip("/") + "#title"
-    if key not in _INDEX_CACHE:
-        corpus = pbuild.corpus_from_documents(spark, sf_dir)
-        tcorp = corpus.withColumn("content", F.substring("content", 1, 80))
-        _INDEX_CACHE[key] = pbuild.build_index(
-            spark, tcorp, n_buckets=16, salt_threshold=64, n_salts=4)
-    return {"content": _index_for(spark, sf_dir), "title": _INDEX_CACHE[key]}
+    return {f: pstore.segment_index(spark, sf_dir, f)
+            for f in ("content", "title")}
 
 
 def _boosting(spark: SparkSession, sf_dir: str) -> DataFrame:

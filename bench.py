@@ -82,8 +82,7 @@ def main() -> None:
             spark, synthetic_corpus(spark, 2000, n_partitions=cpus),
             n_buckets=max(cpus, 16))
         warm.postings.count()
-        for df in (warm.postings, warm.docs, warm.term_stats):
-            df.unpersist()
+        warm.unpersist()
 
     t0 = time.time()
     index = pbuild.build_index(spark, corpus, n_buckets=max(cpus, 16))
@@ -110,8 +109,8 @@ def main() -> None:
         seg_dir = tempfile.mkdtemp(prefix="pysearch_bench_seg_")
         pbuild.write_index(index, seg_dir)
         loaded = pbuild.load_index(spark, seg_dir)
-        loaded.disk_path = seg_dir
         commit_sec = round(time.time() - t0, 4)
+        index.unpersist()  # the committed segment replaces the build caches
         index = loaded
 
     # warm the Python workers / JVM paths before per-query timing — must be

@@ -60,14 +60,6 @@ POSTINGS_SCHEMA = T.StructType([
     T.StructField("block_max_score", T.DoubleType(), False),
 ])
 
-#: kernel output when the encode exchange is dictionary-encoded
-#: (term replaced by term_id = xxhash64(term) through the shuffle; the
-#: string is joined back at BLOCK grain after encode)
-POSTINGS_ID_SCHEMA = T.StructType(
-    [T.StructField("term_id", T.LongType(), False)]
-    + [f for f in POSTINGS_SCHEMA.fields if f.name != "term"])
-
-
 #: positional postings — one row per (term, doc): positions of every
 #: occurrence, ascending. The bucket uses crc32 (not xxhash64) so the
 #: COORDINATOR can compute a term's bucket in pure Python (zlib.crc32)
@@ -136,6 +128,17 @@ class Index:
     n_buckets: int = DEFAULT_BUCKETS
     meta: dict = field(default_factory=dict)
     positions: DataFrame | None = None  # POSITIONS_SCHEMA (phrase family)
+    disk_path: str | None = None  # committed segment dir (set by load_index)
+
+    def pos_bucket(self, term: str) -> int:
+        """The positions-table bucket of a term in this segment."""
+        return pos_bucket_of(term, self.n_buckets)
+
+    def unpersist(self) -> None:
+        """Release the build-side caches (once the segment is committed
+        and reopened, the loaded tables replace them)."""
+        for df in (self.docs, self.postings, self.term_stats):
+            df.unpersist()
 
 
 def corpus_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -211,30 +214,25 @@ def tokenize(corpus: DataFrame, tokenizer: str = "native") -> DataFrame:
     return corpus.select("doc_id", toks.alias("tokens"))
 
 
-def encode_partition_kernel(n_docs: int, avgdl: float, k1: float, b: float,
-                            key_col: str = "term"):
+def encode_partition_kernel(n_docs: int, avgdl: float, k1: float, b: float):
     """mapInPandas kernel: posting-grain rows (doc_id, tf, dl_byte,
-    <key>, salt, df), sorted by (<key>, salt) within the partition, ->
-    encoded block rows. ``key_col`` is "term" (string path, output
-    POSTINGS_SCHEMA) or "term_id" (dictionary-encoded path, output
-    POSTINGS_ID_SCHEMA — int64 run keys compare ~10× faster and the
-    Arrow transfer drops the repeated strings). Runs straddling an Arrow
+    term, salt, df), sorted by (term, salt) within the partition, ->
+    encoded block rows (POSTINGS_SCHEMA). Runs straddling an Arrow
     batch boundary are carried into the next batch. Shared by
-    build_index and merge_indexes' re-salt path."""
-    schema = POSTINGS_SCHEMA if key_col == "term" else POSTINGS_ID_SCHEMA
+    build_index, merge_indexes' re-salt path and versioning.compact."""
 
     def encode_partition(batches):
         import numpy as np
         import pandas as pd
 
-        cols = [f.name for f in schema.fields]
+        cols = [f.name for f in POSTINGS_SCHEMA.fields]
         carry: pd.DataFrame | None = None
 
         def encode_run(doc_ids, tfs, dl_bytes, term, salt, df_global, out):
             idf = float(codec.bm25_idf(df_global, n_docs))
             for r in codec.encode_blocks(doc_ids, tfs, dl_bytes,
                                          idf, avgdl, k1, b):
-                r[key_col] = term
+                r["term"] = term
                 r["salt"] = salt
                 r["bucket"] = 0  # filled by caller (needs xxhash64 = JVM)
                 r["df"] = df_global
@@ -242,7 +240,7 @@ def encode_partition_kernel(n_docs: int, avgdl: float, k1: float, b: float,
 
         def flush(pdf, last_partial):
             """Encode all complete runs of pdf; return (rows, carry)."""
-            terms = pdf[key_col].to_numpy()
+            terms = pdf["term"].to_numpy()
             salts = pdf["salt"].to_numpy()
             change = np.flatnonzero((terms[1:] != terms[:-1])
                                     | (salts[1:] != salts[:-1])) + 1
@@ -288,19 +286,9 @@ def build_index(
     b: float = analysis.B,
     cache: bool = True,
     broadcast_dims: bool = True,
-    dict_encode: bool = False,
     with_positions: bool = False,
 ) -> Index:
-    """Build all index tables from a corpus DataFrame (not yet written out).
-
-    dict_encode: replace the term string with xxhash64 term_id through the
-    encode exchange (see the comment at the encode step). MEASURED
-    neutral-to-negative at 100k docs / short code tokens on this box
-    (ABBA-interleaved medians 0.87×, best-vs-best 1.09× — the extra
-    vocab-grain uniqueness job + block-grain dictionary join offset the
-    ~25% narrower shuffle rows), so OFF by default; the knob exists for
-    corpora with long terms / fat vocabularies where the exchange-width
-    saving dominates. Output is byte-identical either way (tested)."""
+    """Build all index tables from a corpus DataFrame (not yet written out)."""
     if tokenizer == "native":
         toks_col = analysis.tokens_expr(F.col("content"))
     elif tokenizer == "pandas":
@@ -369,31 +357,7 @@ def build_index(
     # (verified in the plan). At 10^12-doc scale, where vocab/doc-count
     # outgrow a broadcast, these become shuffle-hash joins co-partitioned
     # with the encode repartition (pass broadcast_dims=False).
-    #
-    # Dictionary-encoded exchange (r02 perf lever — the (term,salt)
-    # exchange + Arrow transfer was 63% of build wall): the term STRING
-    # is replaced by term_id = xxhash64(term) through the shuffle/sort/
-    # Arrow hop (same hash the bucket layout already uses, so bucket =
-    # pmod(term_id, n_buckets) needs no string either), and the string
-    # is joined back at BLOCK grain (~1/BLOCK_SIZE the rows) after
-    # encode. xxhash64 collisions would silently merge two terms'
-    # posting lists, so a vocab-grain uniqueness check gates the path
-    # and falls back to shuffling strings (never triggered in practice;
-    # P[collision] ≈ |vocab|²/2⁶⁵ ≈ 5e-8 even at 10^9 terms).
-    if dict_encode:
-        chk = term_stats.agg(
-            F.count("*").alias("n"),
-            F.count_distinct(F.xxhash64("term")).alias("nid")).collect()[0]
-        if int(chk["n"]) != int(chk["nid"]):
-            dict_encode = False
-
-    key = "term_id" if dict_encode else "term"
-    dims_cols = ["term", "df", "n_salts"]
-    if dict_encode:
-        dims = term_stats.select(
-            "term", F.xxhash64("term").alias("term_id"), "df", "n_salts")
-    else:
-        dims = term_stats.select(*dims_cols)
+    dims = term_stats.select("term", "df", "n_salts")
     dl_side = docs.select("doc_id", "dl_byte")
     if broadcast_dims:
         dims, dl_side = F.broadcast(dims), F.broadcast(dl_side)
@@ -401,42 +365,30 @@ def build_index(
         tf.join(dims, "term")
         .join(dl_side, "doc_id")
         .withColumn("salt", F.pmod(F.col("doc_id"), F.col("n_salts")).cast("int"))
-        # exchange only what the kernel needs: n_salts (and the string on
-        # the id path) never crosses the wire
-        .select("doc_id", key, F.col("tf").cast("int").alias("tf"),
+        # exchange only what the kernel needs: n_salts never crosses the wire
+        .select("doc_id", "term", F.col("tf").cast("int").alias("tf"),
                 "df", "dl_byte", "salt")
     )
 
     n_docs, avgdl = stats.n_docs, stats.avgdl
 
-    # Encode partition-wise, not group-wise: repartition by (key, salt)
-    # then sort within partitions so each (key, salt) run is contiguous,
+    # Encode partition-wise, not group-wise: repartition by (term, salt)
+    # then sort within partitions so each (term, salt) run is contiguous,
     # and stream Arrow batches through ONE mapInPandas kernel per
     # partition. applyInPandas would pay per-group Arrow/pandas overhead
     # (~10 ms × |vocab| groups dominated the build); here the overhead is
     # per 64k-row batch and the per-term work is pure numpy. Groups that
     # straddle a batch boundary are carried into the next batch.
     n_parts = int(enriched.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    sorted_parts = (enriched.repartition(n_parts, key, "salt")
-                    .sortWithinPartitions(key, "salt"))
+    sorted_parts = (enriched.repartition(n_parts, "term", "salt")
+                    .sortWithinPartitions("term", "salt"))
 
-    encoded = sorted_parts.mapInPandas(
-        encode_partition_kernel(n_docs, avgdl, k1, b, key_col=key),
-        schema=POSTINGS_ID_SCHEMA if dict_encode else POSTINGS_SCHEMA)
-    if dict_encode:
-        tdict = term_stats.select(
-            F.xxhash64("term").alias("term_id"), "term")
-        if broadcast_dims:
-            tdict = F.broadcast(tdict)
-        postings = (
-            encoded
-            .withColumn("bucket",
-                        F.pmod(F.col("term_id"), F.lit(n_buckets)).cast("int"))
-            .join(tdict, "term_id")
-            .select(*[f.name for f in POSTINGS_SCHEMA.fields]))
-    else:
-        postings = encoded.withColumn(
-            "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"))
+    postings = (
+        sorted_parts.mapInPandas(
+            encode_partition_kernel(n_docs, avgdl, k1, b),
+            schema=POSTINGS_SCHEMA)
+        .withColumn("bucket",
+                    F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")))
     if cache:
         postings = postings.persist()
 
@@ -541,4 +493,5 @@ def load_index(spark: SparkSession, out_dir: str) -> Index:
         stats=Stats(n_docs=m["n_docs"], sum_dl=m["sum_dl"]),
         k1=m["k1"], b=m["b"], n_buckets=m["n_buckets"], meta=m.get("meta", {}),
         positions=(spark.read.parquet(pos_path) if _done(pos_path) else None),
+        disk_path=out_dir,
     )

@@ -351,16 +351,16 @@ def _local_blocks_pandas(index: Index, terms: list[str]):
     dispatch around a scan that lands on the driver anyway).
 
     Only for disk-backed segments (Index.disk_path, set by
-    store.segment_index / callers of build.load_index): the bucket of
-    each term comes from the term_meta cache, the matching bucket=N
-    parquet dirs are opened directly with pyarrow.dataset, and the term
+    build.load_index): the bucket of each term comes from the
+    term_meta cache, the matching bucket=N parquet dirs are opened
+    directly with pyarrow.dataset, and the term
     equality filter prunes row groups via parquet statistics — the same
     pruning the Spark plan does, minus the job. Returns None when the
     fast path does not apply (in-memory segment), else a pandas frame of
     candidate block rows (possibly empty)."""
     import os
 
-    path = getattr(index, "disk_path", None)
+    path = index.disk_path
     if path is None:
         return None
     import pandas as pd
@@ -690,8 +690,8 @@ def _positions_rel(index: Index) -> DataFrame:
     """(doc_id, pos, term) positional relation derived from the forward
     index — the FALLBACK when the segment carries no positional
     postings (Index.positions is None). Segments built with
-    with_positions=True (or with phrase.positions_table attached) never
-    hit this path; see _term_positions_leg."""
+    with_positions=True (every store.segment_index segment, and views
+    updated from one) never hit this path; see _term_positions_leg."""
     return index.docs.select(
         "doc_id",
         F.posexplode(analysis.tokens_expr(F.col("content"))).alias("pos", "term"))
@@ -700,17 +700,15 @@ def _positions_rel(index: Index) -> DataFrame:
 def _term_positions_leg(index: Index, term: str) -> DataFrame:
     """(doc_id, pos) occurrences of one term, preferring the segment's
     PERSISTED positional postings ([lucene dep] Lucene84PostingsWriter's
-    position stream): bucket partition-pruned scan (1 of pos_n_buckets
-    dirs) + term predicate pushdown + array explode — never a corpus
-    re-tokenize. Falls back to deriving positions from the forward index
-    only when the segment was built without them (in-memory test
-    segments)."""
+    position stream): bucket partition-pruned scan (one bucket dir,
+    Index.pos_bucket) + term predicate pushdown + array explode — never
+    a corpus re-tokenize. Falls back to deriving positions from the
+    forward index only when the segment was built without them
+    (in-memory test segments)."""
     if index.positions is not None:
-        from .build import pos_bucket_of
-        n = index.meta.get("pos_n_buckets", index.n_buckets)
-        b = pos_bucket_of(term, n)
         return (index.positions
-                .where((F.col("bucket") == b) & (F.col("term") == term))
+                .where((F.col("bucket") == index.pos_bucket(term))
+                       & (F.col("term") == term))
                 .select("doc_id", F.explode("poss").alias("pos")))
     return (_positions_rel(index).where(F.col("term") == term)
             .select("doc_id", "pos"))

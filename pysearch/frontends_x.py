@@ -47,10 +47,9 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from . import analysis
+from . import analysis, store
 from . import oracle_sql as osql
-from .build import pos_bucket_of
-from .phrase import _POS_CTE, N_POS_BUCKETS, positions_table
+from .phrase import _POS_CTE, positions_table, term_doc_positions
 from .registry import Entry, tbl
 
 REGISTRY: dict[str, Entry] = {}
@@ -403,10 +402,8 @@ def agg_significant_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket-pruned term lookup, the background dfs one (term,doc) scan —
     never the raw corpus (SignificantTextAggregationBuilder re-analyzes
     _source per hit; our store already holds the analyzed form)."""
-    pt = positions_table(spark, sf_dir).select("doc_id", "term", "bucket")
-    fg = (pt.where((F.col("bucket") == pos_bucket_of(_SIG_FG_TERM,
-                                                     N_POS_BUCKETS))
-                   & (F.col("term") == _SIG_FG_TERM))
+    pt = positions_table(spark, sf_dir).select("doc_id", "term")
+    fg = (term_doc_positions(spark, sf_dir, _SIG_FG_TERM)
           .select("doc_id").distinct())
     n_fg = float(fg.count())
     n_bg = float(tbl(spark, sf_dir, "documents").count())
@@ -487,9 +484,10 @@ def q_combined_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     k1, b = analysis.K1, analysis.B
     n = float(tbl(spark, sf_dir, "documents").count())
     tf_parts, dl_parts, sum_dl = [], [], 0.0
-    cf_buckets = sorted({pos_bucket_of(t, N_POS_BUCKETS) for t in _CF_TERMS})
     for fname, w in _CF_FIELDS.items():
-        pt = positions_table(spark, sf_dir, fname)
+        seg = store.segment_index(spark, sf_dir, fname)
+        pt = seg.positions
+        cf_buckets = sorted({seg.pos_bucket(t) for t in _CF_TERMS})
         tf_parts.append(
             pt.where(F.col("bucket").isin(cf_buckets)
                      & F.col("term").isin(*_CF_TERMS))

@@ -271,7 +271,8 @@ def fuzz_filter_agg_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     for i, case in enumerate(fa_cases(FA_SEED, FA_DRIVER_N)):
         rows.extend((i, r["grp"], float(r["metric"]))
                     for r in _fa_engine(spark, sf_dir, case).collect())
-    rows.sort()
+    # a NULL group (NULL events.value/ts) sorts first, as in the oracle
+    rows.sort(key=lambda r: (r[0], r[1] is not None, r[1] or "", r[2]))
     return (spark.createDataFrame(rows, "case_id int, grp string, metric double")
             .select("case_id", "grp",
                     F.round("metric", osql.ROUND_DIGITS).alias("metric")))

@@ -6,13 +6,16 @@ within `slop` moves (sloppy). Positions are 0-based indexes into the
 POST-analysis token stream (stopwords removed before position assignment —
 matches how dl is counted, SURVEY §8.7).
 
-Spark formulation: positions live in a PERSISTED positional-postings
-table (term, doc_id, poss array<int>, bucket) written ONCE per corpus —
-bucket-partitioned parquet, bucket = crc32(term) % N so the coordinator
-derives the partition-pruning predicate in pure Python (build.py
-POSITIONS_SCHEMA; [lucene dep] Lucene84PostingsWriter's position stream
-next to the doc/freq stream). A phrase [t0, t1] is a join of the two
-terms' bucket-pruned position rows on (doc_id, pos+1) — the
+Spark formulation: positions live in the committed segment's
+positional-postings table (term, doc_id, poss array<int>, bucket) —
+store.segment_index builds it with the segment and build.write_index
+commits it beside docs/postings, bucket-partitioned parquet with bucket
+= crc32(term) % the segment's n_buckets, so the coordinator derives the
+partition-pruning predicate in pure Python (Index.pos_bucket;
+build.py POSITIONS_SCHEMA; [lucene dep] Lucene84PostingsWriter's
+position stream next to the doc/freq stream). Every field (content,
+title) is its own catalog segment. A phrase [t0, t1] is a join of the
+two terms' bucket-pruned position rows on (doc_id, pos+1) — the
 ExactPhraseMatcher intersection, expressed relationally so Catalyst
 plans it. Queries NEVER re-tokenize documents (the r03 plan audit's one
 remaining scale-killer: posexplode of content at query time was a full
@@ -20,39 +23,12 @@ corpus scan + tokenize per phrase query)."""
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from . import analysis, build
+from . import analysis, store
 from .registry import Entry, tbl
 
 REGISTRY: dict[str, Entry] = {}
-
-N_POS_BUCKETS = 16
-
-#: field name -> Spark column over documents.text (mirrors _MMP_FIELDS)
-_FIELD_COLS = {
-    "content": lambda: F.col("text"),
-    "title": lambda: F.substring("text", 1, 80),
-}
-
-#: (sf_dir, field) -> (parquet path, reader DataFrame) of the persisted
-#: positional index. The DataFrame handle is cached so the parquet file
-#: listing (InMemoryFileIndex over N_POS_BUCKETS dirs, ~1.5 s on a fresh
-#: store) happens ONCE at store-build time, not inside the first query.
-_POS_STORE: dict[tuple[str, str], tuple[str, DataFrame]] = {}
-
-
-def _cleanup_pos_store():
-    for path, _df in _POS_STORE.values():
-        shutil.rmtree(path, ignore_errors=True)
-    _POS_STORE.clear()
-
-
-atexit.register(_cleanup_pos_store)
 
 
 def _reg(name: str, sql: str | None):
@@ -64,41 +40,11 @@ def _reg(name: str, sql: str | None):
 
 def positions_table(spark: SparkSession, sf_dir: str,
                     field: str = "content") -> DataFrame:
-    """The persisted positional-postings table (term, doc_id, poss,
-    bucket) for one corpus field, bucket-partitioned parquet so term
-    lookups partition-prune to 1 of N_POS_BUCKETS dirs.
-
-    For the primary content field this IS the committed segment's
-    positions table (store.segment_index — build.write_index writes it,
-    load_index reads it; r05 brief item 4 removed the former tempdir
-    twin). Derived fields (title) still materialize a standalone
-    positions-only store once per (sf_dir, field)."""
-    if field == "content":
-        from . import store
-
-        idx = store.segment_index(spark, sf_dir)
-        assert idx.n_buckets == N_POS_BUCKETS, \
-            "segment bucket layout must match pos_bucket_of pruning"
-        return idx.positions
-    key = (sf_dir.rstrip("/"), field)
-    if key not in _POS_STORE:
-        d = tbl(spark, sf_dir, "documents")
-        flat = d.select(
-            "doc_id",
-            F.posexplode(analysis.tokens_expr(_FIELD_COLS[field]()))
-            .alias("pos", "term"))
-        path = tempfile.mkdtemp(prefix="pysearch_positions_")
-        (build.positions_frame(flat, N_POS_BUCKETS)
-         .write.mode("overwrite").partitionBy("bucket").parquet(path))
-        _POS_STORE[key] = (path, spark.read.parquet(path))
-    path, df = _POS_STORE[key]
-    # r04 advice: the cached handle is bound to the session that created
-    # it; if that session was stopped and a new one created in the same
-    # process, re-open the (still valid) parquet store on the live session
-    if df.sparkSession is not spark:
-        df = spark.read.parquet(path)
-        _POS_STORE[key] = (path, df)
-    return df
+    """The positional-postings table (term, doc_id, poss, bucket) of one
+    corpus field: the positions table of that field's committed catalog
+    segment (store.segment_index), bucket-partitioned parquet so term
+    lookups partition-prune to one bucket dir."""
+    return store.segment_index(spark, sf_dir, field).positions
 
 
 def positions(spark: SparkSession, sf_dir: str,
@@ -110,13 +56,19 @@ def positions(spark: SparkSession, sf_dir: str,
         "doc_id", F.explode("poss").alias("pos"), "term")
 
 
+def _term_rows(spark: SparkSession, sf_dir: str, term: str,
+               field: str) -> DataFrame:
+    """One term's (term, doc)-grain position rows — bucket partition-
+    pruned scan (one bucket dir) + term predicate pushdown."""
+    idx = store.segment_index(spark, sf_dir, field)
+    return idx.positions.where((F.col("bucket") == idx.pos_bucket(term))
+                               & (F.col("term") == term))
+
+
 def term_positions(spark: SparkSession, sf_dir: str, term: str,
                    field: str = "content") -> DataFrame:
-    """(doc_id, pos) occurrences of one term — bucket partition-pruned
-    scan (1 of N_POS_BUCKETS dirs) + term predicate pushdown."""
-    t = positions_table(spark, sf_dir, field)
-    b = build.pos_bucket_of(term, N_POS_BUCKETS)
-    return (t.where((F.col("bucket") == b) & (F.col("term") == term))
+    """(doc_id, pos) occurrences of one term."""
+    return (_term_rows(spark, sf_dir, term, field)
             .select("doc_id", F.explode("poss").alias("pos")))
 
 
@@ -131,27 +83,18 @@ pos AS (
 
 def term_doc_positions(spark: SparkSession, sf_dir: str, term: str,
                        field: str = "content") -> DataFrame:
-    """(doc_id, poss) — one ARRAY row per doc for one term, bucket
-    partition-pruned (the un-exploded sibling of term_positions)."""
-    t = positions_table(spark, sf_dir, field)
-    b = build.pos_bucket_of(term, N_POS_BUCKETS)
-    return (t.where((F.col("bucket") == b) & (F.col("term") == term))
-            .select("doc_id", "poss"))
+    """(doc_id, poss) — one ARRAY row per doc for one term (the
+    un-exploded sibling of term_positions)."""
+    return _term_rows(spark, sf_dir, term, field).select("doc_id", "poss")
 
 
 # Below this many (term, doc) rows across both phrase legs, the bucket-
-# pruned position rows are gathered to the DRIVER in ONE narrow scan job
+# pruned position rows are read on the DRIVER (pyarrow, zero Spark jobs)
 # and intersected in-process — the same ES coordinator-gather shape (and
-# cap discipline) as exec.LOCAL_MAX_POSTINGS: a selective phrase is a
-# single Spark job instead of a scan+scan+join pipeline (3-4 stages).
-# The cap is probed with a narrow count() on the pruned scan itself
-# (bucket PartitionFilter + term PushedFilter reach the parquet reader,
-# so the count touches 2 of 16 dirs; ~0.15 s warm) followed by the
-# parallel collect — NOT with limit(cap).collect(), whose CollectLimit
-# executes as executeTake's incremental partition waves (measured 3.5 s
-# where count+collect takes 0.3–0.6 s), and NOT via the main index's
-# terms dictionary, which a phrase-only workload would have to build
-# first. Hot phrases fall back to the distributed join below.
+# cap discipline) as exec.LOCAL_MAX_POSTINGS. The cap is probed with
+# pyarrow's count_rows under the term filter (narrow: reads only the
+# filter column's row groups) before the rows are read. Hot phrases fall
+# back to the distributed join below.
 LOCAL_MAX_PAIR_ROWS = 200_000
 
 
@@ -166,31 +109,20 @@ def _pair_count(p0, p1, slop: int) -> int:
 
 def _pair_rows_pandas(spark: SparkSession, sf_dir: str, t0: str, t1: str):
     """Coordinator pyarrow read of the two phrase legs' pruned position
-    bucket dirs — ZERO Spark jobs (the phrase sibling of
-    exec._local_blocks_pandas; r05). The cap is probed first with
-    pyarrow's count_rows under the same term filter (narrow: reads only
-    the filter column's row groups), mirroring the narrow-count probe
-    discipline of the Spark gather below. Returns None when the store is
-    not disk-backed (caller uses the Spark probe+gather), False when the
+    bucket dirs of the committed content segment — ZERO Spark jobs (the
+    phrase sibling of exec._local_blocks_pandas). Returns False when the
     pair is hot (caller uses the distributed join), else a pandas frame
     of (term, doc_id, poss) rows."""
     import glob
     import os
 
-    from . import store
-
-    idx = store.segment_index(spark, sf_dir)
-    path = getattr(idx, "disk_path", None)
-    if path is None or idx.positions is None:
-        return None
     import pandas as pd
     import pyarrow.dataset as ds
 
-    buckets = sorted({build.pos_bucket_of(t, N_POS_BUCKETS)
-                      for t in (t0, t1)})
+    idx = store.segment_index(spark, sf_dir)
     files = sorted(
-        f for b in buckets
-        for f in glob.glob(os.path.join(path, "positions",
+        f for b in sorted({idx.pos_bucket(t) for t in (t0, t1)})
+        for f in glob.glob(os.path.join(idx.disk_path, "positions",
                                         f"bucket={b}", "*.parquet")))
     if not files:
         return pd.DataFrame(columns=["term", "doc_id", "poss"])
@@ -200,18 +132,6 @@ def _pair_rows_pandas(spark: SparkSession, sf_dir: str, t0: str, t1: str):
         return False
     return dataset.to_table(columns=["term", "doc_id", "poss"],
                             filter=flt).to_pandas()
-
-
-def _pair_scan(spark: SparkSession, sf_dir: str,
-               t0: str, t1: str) -> DataFrame:
-    """Bucket+term-pruned scan of BOTH phrase legs' (term, doc_id, poss)
-    rows — the single narrow job the local gather path collects."""
-    pt = positions_table(spark, sf_dir)
-    buckets = sorted({build.pos_bucket_of(t, N_POS_BUCKETS)
-                      for t in (t0, t1)})
-    return (pt.where(F.col("bucket").isin(buckets)
-                     & F.col("term").isin(t0, t1))
-            .select("term", "doc_id", "poss"))
 
 
 def _phrase_pair_join(spark: SparkSession, sf_dir: str,
@@ -244,9 +164,10 @@ def _phrase_pair(t0: str, t1: str, slop: int):
     slop=0 → exact adjacency (pos1 == pos0+1); slop>0 → Lucene-sloppy-ish:
     t1 within (pos0+1 .. pos0+1+slop), order preserved.
 
-    Physical strategies (selected by a limit-probe on the pruned scan):
-      local — ONE job collects both terms' (doc_id, poss) array rows
-              (bucket+term pruned) to the driver; the per-doc position
+    Physical strategies (selected by a row-count probe on the pruned
+    bucket files):
+      local — the driver reads both terms' (doc_id, poss) array rows
+              (bucket+term pruned) with pyarrow; the per-doc position
               intersection runs in-process. ES's coordinator gather for
               selective phrases.
       join  — the two terms' array rows join on doc_id (both sides
@@ -262,15 +183,8 @@ def _phrase_pair(t0: str, t1: str, slop: int):
         pdf = _pair_rows_pandas(spark, sf_dir, t0, t1)
         if pdf is False:                       # probed hot: distributed join
             return _phrase_pair_join(spark, sf_dir, t0, t1, slop)
-        if pdf is not None:                    # coordinator pyarrow read
-            rows = [(r.term, int(r.doc_id), list(r.poss))
-                    for r in pdf.itertuples(index=False)]
-        else:                                  # tempdir store: Spark gather
-            scan = _pair_scan(spark, sf_dir, t0, t1)
-            if scan.count() > LOCAL_MAX_PAIR_ROWS:
-                return _phrase_pair_join(spark, sf_dir, t0, t1, slop)
-            rows = [(r["term"], r["doc_id"], r["poss"])
-                    for r in scan.collect()]
+        rows = [(r.term, int(r.doc_id), list(r.poss))
+                for r in pdf.itertuples(index=False)]
         first = {doc: poss for term, doc, poss in rows if term == t0}
         out = sorted(
             (doc, n)
@@ -339,7 +253,7 @@ REGISTRY["q_phrase_prefix"] = Entry(
 # that field's own dl/avgdl statistics.
 # ---------------------------------------------------------------------------
 
-_MMP_FIELDS = {  # field name -> DuckDB text expression (Spark: _FIELD_COLS)
+_MMP_FIELDS = {  # field name -> DuckDB text expression (Spark: store.py segments)
     "content": "text",
     "title": "substr(text, 1, 80)",
 }

@@ -25,8 +25,8 @@ Reference anchors (upstream ES tree):
 Spark formulation: reads the PERSISTED positional-postings table
 (phrase.positions_table — bucket-partitioned parquet, crc32 buckets),
 matched with a join whose band predicate Catalyst turns into a
-doc_id-keyed join + filter. Term legs partition-prune to 1 of
-N_POS_BUCKETS dirs; no query-time re-tokenize (r03 plan-audit fix).
+doc_id-keyed join + filter. Term legs partition-prune to one bucket
+dir; no query-time re-tokenize (r03 plan-audit fix).
 """
 
 from __future__ import annotations

@@ -51,7 +51,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from . import build, merge
+from . import build, merge, store
 from .build import DEFAULT_N_SALTS, DEFAULT_SALT_THRESHOLD, Index, POSTINGS_SCHEMA, Stats
 from .registry import Entry
 
@@ -101,7 +101,12 @@ def update_doc(view: IndexView, doc_id: int, new_content: str) -> IndexView:
     """Versioned re-index (InternalEngine#index on an existing _id):
     soft-delete the old doc_id and add the new version under a FRESH
     doc_id (Lucene never rewrites a doc in place) via a delta-segment
-    merge. Identity columns (repo, path, commit, lang) carry over."""
+    merge. Identity columns (repo, path, commit, lang) carry over.
+
+    A base with positions keeps them: the merged index's positions are
+    base ∪ delta rows (the doc_ids are disjoint, so the union is exact),
+    and the delta's rows are materialized as a local relation, so phrase
+    legs over the view stay pruned scans that never re-tokenize."""
     idx = view.index
     spark = idx.docs.sparkSession
     new_id = int(idx.docs.agg(F.max("doc_id")).collect()[0][0]) + 1
@@ -110,13 +115,18 @@ def update_doc(view: IndexView, doc_id: int, new_content: str) -> IndexView:
         .select(F.lit(new_id).cast("long").alias("doc_id"),
                 "repo", "path", "commit", "lang",
                 F.lit(new_content).alias("content")))
+    with_positions = idx.positions is not None
     delta = build.build_index(
         spark, delta_corpus,
         n_buckets=idx.n_buckets,
         salt_threshold=idx.meta.get("salt_threshold", DEFAULT_SALT_THRESHOLD),
         n_salts=idx.meta.get("n_salts", DEFAULT_N_SALTS),
-        k1=idx.k1, b=idx.b, cache=False)
+        k1=idx.k1, b=idx.b, cache=False, with_positions=with_positions)
     merged = merge.merge_indexes(spark, [idx, delta])
+    if with_positions:
+        delta_pos = spark.createDataFrame(delta.positions.collect(),
+                                          build.POSITIONS_SCHEMA)
+        merged.positions = idx.positions.unionByName(delta_pos)
     return IndexView(index=merged,
                      deletes=view.deletes | {int(doc_id)},
                      seq_no=view.seq_no + 1)
@@ -253,23 +263,16 @@ _LIVE_CTE = f"""live AS (
   UNION ALL{_V2_SELECT}
 )"""
 
-_VIEW_CACHE: dict[str, IndexView] = {}
-_COMPACT_CACHE: dict[str, Index] = {}
-
 
 def _lifecycle_view(spark: SparkSession, sf_dir: str) -> IndexView:
-    """base index → update U → delete D (cached per sf_dir)."""
-    import __spark_entry__ as em
-
-    key = sf_dir.rstrip("/")
-    if key not in _VIEW_CACHE:
-        view = open_view(em._index_for(spark, sf_dir))
+    """base segment → update U → delete D (a store catalog value)."""
+    def make() -> IndexView:
+        view = open_view(store.segment_index(spark, sf_dir))
         v1 = view.index.docs.where(
             F.col("doc_id") == _LC_UPDATE).select("content").collect()[0][0]
         view = update_doc(view, _LC_UPDATE, v1 + _LC_SUFFIX)
-        view = delete_doc(view, _LC_DELETE)
-        _VIEW_CACHE[key] = view
-    return _VIEW_CACHE[key]
+        return delete_doc(view, _LC_DELETE)
+    return store.cached(spark, ("versioning.view", sf_dir.rstrip("/")), make)
 
 
 def _lc_sql_pre_merge() -> str:
@@ -311,10 +314,8 @@ def merge_drops_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import exec as pexec
     from . import oracle_sql as osql
 
-    key = sf_dir.rstrip("/")
-    if key not in _COMPACT_CACHE:
-        _COMPACT_CACHE[key] = compact(_lifecycle_view(spark, sf_dir))
-    idx = _COMPACT_CACHE[key]
+    idx = store.cached(spark, ("versioning.compact", sf_dir.rstrip("/")),
+                       lambda: compact(_lifecycle_view(spark, sf_dir)))
     hits = pexec.search(idx, _LC_TEXT, k=_LC_K)
     return hits.select(
         "doc_id", F.round("score", osql.ROUND_DIGITS).alias("score"))

@@ -121,3 +121,17 @@ def test_fuzz_generator_covers_bug_classes():
     for marker in ('"the', '"a', "zzqqabsent", "must_not", "filter",
                    "match_phrase", "minimum_should_match", "srcNA", '"xx"'):
         assert marker in blob, f"generator lost coverage of {marker!r}"
+
+
+def test_fa_driver_key_sorts_null_groups(spark, monkeypatch):
+    """A NULL group key (NULL events.value or ts) must not crash the
+    driver-side sort of fuzz_filter_agg_equiv; it sorts first within its
+    case."""
+    def engine(spark, sf_dir, case):
+        return spark.createDataFrame([("b", 2.0), (None, 1.0), ("a", 3.0)],
+                                     "grp string, metric double")
+
+    monkeypatch.setattr(fuzz, "_fa_engine", engine)
+    rows = fuzz.fuzz_filter_agg_equiv(spark, SF).collect()
+    assert len(rows) == 3 * fuzz.FA_DRIVER_N
+    assert [r["grp"] for r in rows[:3]] == [None, "a", "b"]

@@ -17,16 +17,27 @@ def _plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _pair_rows_spark(spark, t0, t1):
+    """Spark read of both phrase legs' (term, doc_id, poss) rows: the
+    content segment's positions table under the bucket and term filter
+    phrase._pair_rows_pandas applies to its files."""
+    from pysearch import phrase, store
+
+    idx = store.segment_index(spark, SF_SMOKE)
+    buckets = sorted({idx.pos_bucket(t) for t in (t0, t1)})
+    return (phrase.positions_table(spark, SF_SMOKE)
+            .where(F.col("bucket").isin(buckets) & F.col("term").isin(t0, t1))
+            .select("term", "doc_id", "poss"))
+
+
 def test_phrase_plan_reads_persisted_positions(spark):
-    """Both q_phrase physical paths scan the positions parquet with a
+    """A bucket+term filtered read of the positions table and the >cap
+    distributed join fallback both scan the positions parquet with a
     bucket PartitionFilter and contain NO corpus scan / re-tokenize
-    (no documents.parquet, no regexp_replace, no posexplode Generate):
-    the local gather path's ONE probe scan, and the >cap distributed
-    join fallback."""
+    (no documents.parquet, no regexp_replace, no posexplode Generate)."""
     from pysearch import phrase
 
-    phrase.positions_table(spark, SF_SMOKE)  # warm the store
-    for df in (phrase._pair_scan(spark, SF_SMOKE, "merge", "sort"),
+    for df in (_pair_rows_spark(spark, "merge", "sort"),
                phrase._phrase_pair_join(spark, SF_SMOKE,
                                         "merge", "sort", 0)):
         plan = _plan_of(df)
@@ -123,47 +134,48 @@ def test_build_with_positions_roundtrip(spark):
 
 
 def test_tree_phrase_uses_persisted_positions(spark):
-    """search_tree's PhraseNode leg (exec._phrase_docs) reads the
-    segment's positional postings when attached — bucket-pruned scan,
-    no corpus re-tokenize — and returns exactly the docs the
-    forward-index fallback derivation returns."""
-    from pysearch import build, phrase
+    """search_tree's PhraseNode leg (exec._phrase_docs) over a committed
+    segment built with positions reads its positional postings —
+    bucket-pruned scan, no corpus re-tokenize — and returns exactly the
+    docs the forward-index fallback derivation returns."""
+    import dataclasses
+
+    from pysearch import build
     from pysearch import exec as pexec
 
     corpus = build.corpus_from_documents(spark, SF_SMOKE)
     idx = build.build_index(spark, corpus, n_buckets=8, salt_threshold=50,
-                            n_salts=4)
-    assert idx.positions is None
+                            n_salts=4, with_positions=True)
+    no_pos = dataclasses.replace(idx, positions=None)
     fallback = {r["doc_id"] for r in
-                pexec._phrase_docs(idx, ["merge", "sort"], 1).collect()}
+                pexec._phrase_docs(no_pos, ["merge", "sort"], 1).collect()}
 
-    idx.positions = phrase.positions_table(spark, SF_SMOKE)
-    idx.meta["pos_n_buckets"] = phrase.N_POS_BUCKETS
-    df = pexec._phrase_docs(idx, ["merge", "sort"], 1)
-    plan = _plan_of(df)
-    assert "documents.parquet" not in plan
-    assert "regexp_replace" not in plan.lower()
-    assert "PartitionFilters: [isnotnull(bucket" in plan
-    got = {r["doc_id"] for r in df.collect()}
+    with tempfile.TemporaryDirectory(prefix="pysearch_seg_") as d:
+        build.write_index(idx, d)
+        df = pexec._phrase_docs(build.load_index(spark, d),
+                                ["merge", "sort"], 1)
+        plan = _plan_of(df)
+        assert "documents.parquet" not in plan
+        assert "regexp_replace" not in plan.lower()
+        assert "PartitionFilters: [isnotnull(bucket" in plan
+        got = {r["doc_id"] for r in df.collect()}
     assert got == fallback
     assert got, "phrase 'merge sort' should match at sf0.001"
 
 
 def test_phrase_pyarrow_fast_path(spark):
-    """r05: with a committed segment on disk, the phrase pair gather is
-    a coordinator pyarrow read (no Spark scan job) — same rows as the
-    Spark probe+gather scan, same final relation as the distributed
-    join; above the cap it signals the join fallback."""
+    """The phrase pair gather is a coordinator pyarrow read of the
+    committed segment (no Spark scan job) — same rows as a Spark read
+    under the same filter, same final relation as the distributed join;
+    above the cap it signals the join fallback."""
     from pysearch import phrase
 
-    phrase.positions_table(spark, SF_SMOKE)  # commits the segment
     pdf = phrase._pair_rows_pandas(spark, SF_SMOKE, "merge", "sort")
-    assert pdf is not None and pdf is not False, \
-        "fast path must engage on a disk-backed segment"
+    assert pdf is not False, "fast path must engage below the cap"
     got = {(r.term, int(r.doc_id), tuple(r.poss))
            for r in pdf.itertuples(index=False)}
     want = {(r["term"], r["doc_id"], tuple(r["poss"])) for r in
-            phrase._pair_scan(spark, SF_SMOKE, "merge", "sort").collect()}
+            _pair_rows_spark(spark, "merge", "sort").collect()}
     assert got == want
 
     local = phrase._phrase_pair("merge", "sort", 0)(spark, SF_SMOKE)
@@ -175,7 +187,6 @@ def test_phrase_pyarrow_fast_path(spark):
 def test_phrase_pyarrow_cap_falls_back(spark, monkeypatch):
     from pysearch import phrase
 
-    phrase.positions_table(spark, SF_SMOKE)
     monkeypatch.setattr(phrase, "LOCAL_MAX_PAIR_ROWS", 0)
     assert phrase._pair_rows_pandas(
         spark, SF_SMOKE, "merge", "sort") is False

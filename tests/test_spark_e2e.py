@@ -134,20 +134,3 @@ def test_write_load_resume(built_index, spark, tmp_path_factory):
     c = pexec.search(loaded2, "merge sort", k=10).collect()
     assert [(r["doc_id"], r["score"]) for r in a] == \
         [(r["doc_id"], r["score"]) for r in c]
-
-
-def test_dict_encoded_exchange_byte_identical(spark):
-    """The dictionary-encoded (term_id through the shuffle) build must
-    produce EXACTLY the postings of the string-keyed path — blocks,
-    impacts, salting, buckets."""
-    from pysearch import build
-
-    corpus = build.corpus_from_documents(spark, "/root/testdata/sf0.001")
-    cols = [f.name for f in build.POSTINGS_SCHEMA.fields]
-    a = build.build_index(spark, corpus, n_buckets=8, salt_threshold=50,
-                          n_salts=4, cache=False, dict_encode=True)
-    b = build.build_index(spark, corpus, n_buckets=8, salt_threshold=50,
-                          n_salts=4, cache=False, dict_encode=False)
-    ra = sorted(tuple(r) for r in a.postings.select(cols).collect())
-    rb = sorted(tuple(r) for r in b.postings.select(cols).collect())
-    assert ra == rb

@@ -102,3 +102,32 @@ def test_compact_scores_shift_like_forcemerge(spark, lifecycle):
     assert pre and post
     shared = set(pre) & set(post)
     assert shared and any(abs(pre[d] - post[d]) > 1e-9 for d in shared)
+
+
+def test_updated_view_phrase_reads_persisted_positions(spark):
+    """update_doc over a segment with positions keeps them (base ∪ delta
+    rows): a phrase leg over the updated view is a pruned positions scan
+    with no corpus re-tokenize, and it returns the docs the forward-index
+    fallback returns, the new version included."""
+    import dataclasses
+
+    from pysearch import exec as pexec
+    from pysearch import store
+
+    base = store.segment_index(spark, SF)
+    v1_text = base.docs.where(F.col("doc_id") == 3) \
+        .select("content").collect()[0][0]
+    view = versioning.update_doc(versioning.open_view(base), 3,
+                                 v1_text + " updated merge sort handler")
+    new_id = base.stats.n_docs  # fresh doc_id = max+1 = N
+
+    df = pexec._phrase_docs(view.index, ["merge", "sort"], 0)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "documents" not in plan
+    assert "regexp_replace" not in plan.lower()
+    got = {int(r["doc_id"]) for r in df.collect()}
+    no_pos = dataclasses.replace(view.index, positions=None)
+    fallback = {int(r["doc_id"]) for r in
+                pexec._phrase_docs(no_pos, ["merge", "sort"], 0).collect()}
+    assert got == fallback
+    assert new_id in got

@@ -5,29 +5,41 @@ Models the reference's query-then-fetch lifecycle (SURVEY §3.1):
   -> scoring (vectorized numpy over decoded blocks)
   -> global top-k (score desc, doc_id asc)  -> fetch phase (join docs).
 
-Two physical strategies (auto-selected by estimated candidate size):
+One driver-side block read (_local_blocks_pandas): a pyarrow read of the
+pruned bucket dirs of a committed segment — no Spark job once the terms
+dictionary is warm — or one narrow collect of the same bucket+term-pruned
+scan for an in-memory segment. Three physical strategies, auto-selected
+by the Σdf estimate over the query terms (search_many):
 
-  * 'distributed' — posting rows are decoded+scored per partition with
-    mapInPandas (narrow, no gather), then groupBy(doc_id).sum + Spark's
-    TakeOrderedAndProject (a distributed bounded heap) produce the global
-    top-k. Scales to arbitrarily hot terms; the shuffle carries one row
-    per (candidate doc, term). ES analog: per-shard query phase +
+  * 'local' (Σdf <= LOCAL_MAX_POSTINGS) — the driver-side block read,
+    scored in process by the numpy MAXSCORE/block-max kernel
+    (_score_query_group): terms are processed in descending max-impact
+    order; once the sum of remaining terms' upper bounds drops below the
+    running kth score, remaining terms can no longer introduce new
+    winners, so only blocks whose docID range intersects current
+    candidates are decoded (block skipping via the block_max/first_doc_id
+    impact metadata). Rank-identical to exhaustive scoring — verified in
+    tests. [lucene dep] WANDScorer / MaxScoreCache / ImpactsDISI;
+    collector TopScoreDocCollector#setMinCompetitiveScore. The
+    interactive single-query path (search_interactive) is this strategy
+    returning pandas.
+
+  * 'gather' (Σdf <= GATHER_MAX_POSTINGS) — the same kernel on the
+    executors: all posting blocks of a query go to ONE task per query
+    (ES's scatter-gather; off the driver but still single-task).
+
+  * 'distributed' — the one executor BM25 kernel (_scored_postings)
+    decodes and scores posting rows per partition with mapInPandas
+    (narrow, no gather); _match_scores sums them per (query, doc) and
+    applies the AND rule; a window ranks each query's top-k. Scales to
+    arbitrarily hot terms; the shuffle carries one row per (candidate
+    doc, term). ES analog: per-shard query phase +
     SearchPhaseController#reducedQueryPhase.
 
-  * 'gather' — all posting blocks for the query's terms go to ONE task per
-    query (tiny for selective queries; exactly ES's scatter-gather), where
-    a numpy MAXSCORE/block-max scorer prunes: terms are processed in
-    descending max-impact order; once the sum of remaining terms' upper
-    bounds drops below the running kth score, remaining terms can no
-    longer introduce new winners, so only blocks whose docID range
-    intersects current candidates are decoded (block skipping via the
-    block_max/first_doc_id impact metadata). Rank-identical to exhaustive
-    scoring — verified in tests. [lucene dep] WANDScorer / MaxScoreCache /
-    ImpactsDISI; collector TopScoreDocCollector#setMinCompetitiveScore.
-
-Batch API: search_many() plans N queries as ONE Spark job (queries
-broadcast-joined against postings, groupBy(query_id) gather) — the shape a
-100 TB deployment actually runs (query throughput, not one-off latency).
+The compound scorers (bool, dis_max, multi_match, function_score, ...)
+sit on the same executor kernel (_per_term_scored, _match_scores);
+counting and the multi-term rewrites on one docID-only kernel
+(_decoded_ids).
 """
 
 from __future__ import annotations
@@ -54,6 +66,11 @@ HIT_SCHEMA = T.StructType([
 GATHER_MAX_POSTINGS = 20_000_000
 TERM_DICT_CACHE_MAX = 200_000    # full term-dict driver cache below this vocab size
 
+# posting-block columns the scoring and counting kernels read
+BLOCK_COLS = ["term", "salt", "df", "block_id", "n_in_block", "first_doc_id",
+              "docid_gaps", "tfs_enc", "norms_enc", "block_max_tf",
+              "block_max_score"]
+
 
 @dataclass
 class Query:
@@ -67,8 +84,19 @@ class Query:
         return cls(query_id, analysis.analyze(text), k, mode)
 
 
+def _terms(text_or_terms) -> list[str]:
+    """Analyzed tokens of a query string; a term list passes through."""
+    return (analysis.analyze(text_or_terms)
+            if isinstance(text_or_terms, str) else list(text_or_terms))
+
+
+def _bm25_params(index: Index) -> tuple:
+    """(n_docs, avgdl, k1, b) — the scalars every BM25 kernel closes over."""
+    return index.stats.n_docs, index.stats.avgdl, index.k1, index.b
+
+
 # ---------------------------------------------------------------------------
-# numpy scoring kernels (shared by both physical strategies)
+# numpy scoring kernels
 # ---------------------------------------------------------------------------
 
 
@@ -86,16 +114,14 @@ def _topk(doc_ids: np.ndarray, scores: np.ndarray, k: int):
     return doc_ids[order], scores[order]
 
 
-def _score_query_group(pdf, n_docs: int, avgdl: float, k1: float, b: float):
-    """Grouped-map kernel: all posting blocks of one query -> its top-k.
-
-    Implements MAXSCORE with block skipping (see module docstring).
-    """
+def _score_query_group(pdf, q: Query, n_docs: int, avgdl: float, k1: float,
+                       b: float):
+    """All posting blocks of query `q` (BLOCK_COLS + its per-term `weight`)
+    -> its top-k (query_id, doc_id, score), ordered (score desc, doc_id
+    asc). Implements MAXSCORE with block skipping (see module docstring)."""
     import pandas as pd
 
-    k = int(pdf["k"].iloc[0])
-    mode = pdf["mode"].iloc[0]
-    qid = int(pdf["query_id"].iloc[0])
+    k, mode = q.k, q.mode
 
     # per (term,salt) posting lists, with per-term query weight + global df
     lists = []
@@ -129,8 +155,6 @@ def _score_query_group(pdf, n_docs: int, avgdl: float, k1: float, b: float):
         dlq = codec.byte4_to_int(nrm)
         sc = lst["idf"] * codec.bm25_tf_weight(tfs, dlq, avgdl, k1, b) * lst["weight"]
         return ids, sc
-
-    n_terms = len({l["term"] for l in lists})
 
     if mode == "and":
         # decode all, per-term doc sets; intersect ascending-df first
@@ -200,7 +224,19 @@ def _score_query_group(pdf, n_docs: int, avgdl: float, k1: float, b: float):
                 theta = np.partition(acc_sc, len(acc_sc) - k)[len(acc_sc) - k]
         top_ids, top_sc = _topk(acc_ids, acc_sc, k)
 
-    return pd.DataFrame({"query_id": qid, "doc_id": top_ids, "score": top_sc})
+    return pd.DataFrame({"query_id": q.query_id, "doc_id": top_ids, "score": top_sc})
+
+
+def _ids_pd(blocks):
+    """docID-gap decode of posting-block rows -> pandas (doc_id, term), one
+    row per posting — no tf/norm decode, no BM25."""
+    import pandas as pd
+
+    counts = blocks["n_in_block"].to_numpy(dtype=np.int64)
+    ids, _, _ = codec.decode_blocks_concat(
+        blocks["first_doc_id"].to_numpy(), blocks["docid_gaps"], counts)
+    return pd.DataFrame({"doc_id": ids,
+                         "term": np.repeat(blocks["term"].to_numpy(), counts)})
 
 
 # ---------------------------------------------------------------------------
@@ -209,15 +245,10 @@ def _score_query_group(pdf, n_docs: int, avgdl: float, k1: float, b: float):
 
 
 def _queries_df(index: Index, queries: list[Query]):
-    spark = index.postings.sparkSession
-    rows = []
-    for q in queries:
-        for term, mult in Counter(q.terms).items():
-            rows.append((q.query_id, term, float(mult), q.k, q.mode))
-    schema = "query_id long, term string, weight double, k int, mode string"
-    if not rows:
-        return spark.createDataFrame([], schema)
-    return spark.createDataFrame(rows, schema)
+    rows = [(q.query_id, term, float(mult))
+            for q in queries for term, mult in Counter(q.terms).items()]
+    return index.postings.sparkSession.createDataFrame(
+        rows, "query_id long, term string, weight double")
 
 
 def term_meta(index: Index, terms: list[str]) -> dict[str, tuple[int, int]]:
@@ -261,12 +292,9 @@ def term_meta(index: Index, terms: list[str]) -> dict[str, tuple[int, int]]:
     return {t: cache[t] for t in terms}
 
 
-def _candidate_blocks(index: Index, terms: list[str]) -> DataFrame | None:
+def _candidate_blocks(index: Index, terms: list[str]) -> DataFrame:
     """Bucket+term-pruned narrow scan of posting blocks, with NO
-    query-relation join — for paths that only need the block columns
-    (driver-local scoring, counting, multi-term rewrites). Skipping the
-    broadcast build saves a whole Spark job per query (r03 measurement:
-    ~0.4 s at sf0.1). Returns None when no query term exists in the index.
+    query-relation join (empty when no query term exists in the index).
 
     Bucket pruning: the IN-list on `bucket` prunes parquet partitions when
     the postings table is disk-backed (postings are partitionBy(bucket))."""
@@ -274,53 +302,47 @@ def _candidate_blocks(index: Index, terms: list[str]) -> DataFrame | None:
     meta = term_meta(index, terms)
     buckets = sorted({b for _, b in meta.values() if b >= 0})
     if not buckets:
-        return None
+        return index.postings.where(F.lit(False))
     return index.postings.where(
         F.col("bucket").isin(buckets) & F.col("term").isin(terms))
 
 
 def _candidates(index: Index, queries: list[Query]) -> DataFrame:
-    """Posting rows for all query terms, tagged with query_id/weight/k/mode.
-
-    Bucket pruning: the IN-list on `bucket` prunes parquet partitions when
-    the postings table is disk-backed (postings are partitionBy(bucket))."""
+    """Posting blocks for all query terms, tagged with query_id/weight by a
+    broadcast join with the query relation (the executor strategies)."""
     terms = sorted({t for q in queries for t in q.terms})
-    qdf = _queries_df(index, queries)
-    cand = _candidate_blocks(index, terms)
-    if cand is None:
-        cand = index.postings.where(F.lit(False))
-    return cand.join(F.broadcast(qdf), "term")
+    return _candidate_blocks(index, terms).join(
+        F.broadcast(_queries_df(index, queries)), "term")
 
 
-# Below this Σdf the candidate blocks are gathered to the DRIVER (one narrow
-# scan job) and scored in numpy — the ES coordinator-gather shape. The cap is
-# a coordinator-memory knob, not a correctness bound: 2M postings is ~16k
-# encoded block rows (~tens of MB collected), decoded+MAXSCOREd in well under
-# a second, and beats the distributed path's multi-job floor by ~7× (r03
-# measurement at 600k postings: 0.85 s local vs 6.4 s distributed on
-# local[8]). Truly hot terms at 10^12-doc scale (billions of postings) still
-# route to gather/distributed via the estimate.
+# Below this Σdf the candidate blocks are gathered to the DRIVER (pyarrow,
+# or one narrow scan job) and scored in numpy — the ES coordinator-gather
+# shape. The cap is a coordinator-memory knob, not a correctness bound: 2M
+# postings is ~16k encoded block rows (~tens of MB collected), decoded+
+# MAXSCOREd in well under a second, and beats the distributed path's
+# multi-job floor by ~7× (r03 measurement at 600k postings: 0.85 s local
+# vs 6.4 s distributed on local[8]). Truly hot terms at 10^12-doc scale
+# (billions of postings) still route to gather/distributed via the estimate.
 LOCAL_MAX_POSTINGS = 2_000_000
 
 
 def search_many(index: Index, queries: list[Query], method: str = "auto") -> DataFrame:
-    """Batch top-k search: one Spark job for N queries -> (query_id, doc_id, score).
+    """Batch top-k search: N queries -> (query_id, doc_id, score).
 
     Physical strategies (ES query-then-fetch analogs, auto-selected by
-    Σ df over the query terms):
-      local        — candidate posting blocks are collect()ed straight to
-                     the driver (bucket-pruned narrow scan, NO shuffle,
-                     no Python workers) and scored in numpy there. This
-                     is exactly the ES coordinator gather for selective
-                     queries; latency = one Spark scan job.
-      gather       — blocks shuffle to one task per query; MAXSCORE kernel.
+    Σ df over the query terms; see the module docstring):
+      local        — the driver-side block read (_local_blocks_pandas)
+                     scored by MAXSCORE in process: no Spark job on a
+                     committed segment once the dictionary is warm, one
+                     narrow scan job on an in-memory one.
+      gather       — ONE Spark job: blocks shuffle to one task per query;
+                     the same MAXSCORE kernel.
       distributed  — decode+score per partition, shuffle (doc,query) grain,
                      window top-k. For hot terms / huge candidate sets.
     """
     queries = [q for q in queries if q.terms]
-    spark = index.postings.sparkSession
     if not queries:
-        return spark.createDataFrame([], HIT_SCHEMA)
+        return index.postings.sparkSession.createDataFrame([], HIT_SCHEMA)
 
     if method == "auto":
         est = _estimate_postings(index, queries)
@@ -332,80 +354,67 @@ def search_many(index: Index, queries: list[Query], method: str = "auto") -> Dat
         return _search_local(index, queries)
 
     if method == "gather":
-        cand = _candidates(index, queries)
-        n_docs, avgdl, k1, b = index.stats.n_docs, index.stats.avgdl, index.k1, index.b
+        by_id = {q.query_id: q for q in queries}
+        bm25 = _bm25_params(index)
 
         def kernel(pdf):
-            return _score_query_group(pdf, n_docs, avgdl, k1, b)
+            return _score_query_group(
+                pdf, by_id[int(pdf["query_id"].iloc[0])], *bm25)
 
-        return cand.groupBy("query_id").applyInPandas(kernel, schema=HIT_SCHEMA)
+        return (_candidates(index, queries).groupBy("query_id")
+                .applyInPandas(kernel, schema=HIT_SCHEMA))
 
-    # distributed: decode+score per partition, shuffle (doc_id,query_id) grain
     return _search_distributed(index, queries)
 
 
 def _local_blocks_pandas(index: Index, terms: list[str]):
-    """Driver-side PYARROW read of the pruned posting bucket dirs — ZERO
-    Spark jobs once the terms dictionary is warm (r05 brief item 6: the
-    remaining 0.2-0.4 s of selective-query latency was pure Spark job
-    dispatch around a scan that lands on the driver anyway).
+    """The one driver-side read of candidate posting blocks -> a pandas
+    frame of BLOCK_COLS rows (possibly empty); serves the local strategy,
+    search_interactive and count_matches.
 
-    Only for disk-backed segments (Index.disk_path, set by
-    build.load_index): the bucket of each term comes from the
-    term_meta cache, the matching bucket=N parquet dirs are opened
-    directly with pyarrow.dataset, and the term
+    Committed segments (Index.disk_path, set by build.load_index) are read
+    with PYARROW: the bucket of each term comes from the term_meta cache,
+    the matching bucket=N parquet dirs are opened directly and the term
     equality filter prunes row groups via parquet statistics — the same
-    pruning the Spark plan does, minus the job. Returns None when the
-    fast path does not apply (in-memory segment), else a pandas frame of
-    candidate block rows (possibly empty)."""
+    pruning the Spark plan does, minus the job. ZERO Spark jobs once the
+    terms dictionary is warm (the 0.2-0.4 s selective-query floor was job
+    dispatch around a scan that lands on the driver anyway). In-memory
+    segments take one narrow collect of the same pruned scan."""
+    import glob
     import os
 
-    path = index.disk_path
-    if path is None:
-        return None
     import pandas as pd
 
-    meta = term_meta(index, terms)
-    buckets = sorted({b for _, b in meta.values() if b >= 0})
-    cols = ["term", "salt", "df", "block_id", "n_in_block", "first_doc_id",
-            "docid_gaps", "tfs_enc", "norms_enc", "block_max_tf",
-            "block_max_score"]
-    dirs = [os.path.join(path, "postings", f"bucket={b}") for b in buckets]
-    dirs = [d for d in dirs if os.path.isdir(d)]
-    if not dirs:
-        return pd.DataFrame(columns=cols)
-    import glob
-
+    terms = sorted(set(terms))
+    if index.disk_path is None:
+        rows = _candidate_blocks(index, terms).select(*BLOCK_COLS).collect()
+        return pd.DataFrame([tuple(r) for r in rows], columns=BLOCK_COLS)
     import pyarrow.dataset as ds
 
-    files = sorted(f for d in dirs
-                   for f in glob.glob(os.path.join(d, "*.parquet")))
+    buckets = sorted({b for _, b in term_meta(index, terms).values() if b >= 0})
+    files = sorted(f for b in buckets for f in glob.glob(os.path.join(
+        index.disk_path, "postings", f"bucket={b}", "*.parquet")))
     if not files:
-        return pd.DataFrame(columns=cols)
-    dataset = ds.dataset(files, format="parquet")
-    tbl = dataset.to_table(columns=cols,
-                           filter=ds.field("term").isin(terms))
-    return tbl.to_pandas()
+        return pd.DataFrame(columns=BLOCK_COLS)
+    return (ds.dataset(files, format="parquet")
+            .to_table(columns=BLOCK_COLS, filter=ds.field("term").isin(terms))
+            .to_pandas())
 
 
 def _score_blocks_pd(index: Index, blocks, queries: list[Query]):
-    """Per-query tagging + MAXSCORE over a local pandas frame of
-    candidate block rows -> pandas hits (query_id, doc_id, score)."""
+    """MAXSCORE per query over a driver-side frame of candidate block rows
+    -> pandas hits (query_id, doc_id, score), ordered by query_id, then
+    (score desc, doc_id asc)."""
     import pandas as pd
 
+    bm25 = _bm25_params(index)
     outs = []
     for q in sorted(queries, key=lambda q: q.query_id):
         mult = {t: float(m) for t, m in Counter(q.terms).items()}
         g = blocks[blocks["term"].isin(mult)]
-        if not len(g):
-            continue
-        g = g.copy()
-        g["query_id"] = q.query_id
-        g["weight"] = g["term"].map(mult)
-        g["k"] = q.k
-        g["mode"] = q.mode
-        outs.append(_score_query_group(
-            g, index.stats.n_docs, index.stats.avgdl, index.k1, index.b))
+        if len(g):
+            outs.append(_score_query_group(
+                g.assign(weight=g["term"].map(mult)), q, *bm25))
     if not outs:
         return pd.DataFrame({"query_id": pd.Series(dtype="int64"),
                              "doc_id": pd.Series(dtype="int64"),
@@ -414,67 +423,33 @@ def _score_blocks_pd(index: Index, blocks, queries: list[Query]):
 
 
 def _search_local(index: Index, queries: list[Query]) -> DataFrame:
-    """Driver-side scoring: candidate posting blocks are gathered to the
-    driver — via the pyarrow fast path for disk-backed segments (no
-    Spark job at all), else ONE narrow collect job (term+bucket pruned)
-    — then the same MAXSCORE kernel runs in-process. Returns a small
-    local DataFrame of top-k rows.
+    """Local strategy: the driver-side block read + in-process MAXSCORE
+    -> a small local DataFrame of top-k rows.
 
     The query relation is NOT joined in (unlike the gather/distributed
-    paths): the blocks land on the driver anyway, so per-query tagging
-    (query_id/weight/k/mode) is a pandas map here — skipping the
-    broadcast-build job halves selective-query latency (the broadcast
-    exchange cost a second job + ~0.4 s at sf0.1; r03 measurement)."""
-    import pandas as pd
-
-    spark = index.postings.sparkSession
+    paths): the blocks land on the driver anyway, so per-query tagging is
+    a pandas map here — skipping the broadcast-build job halves
+    selective-query latency (r03 measurement: ~0.4 s at sf0.1)."""
     terms = sorted({t for q in queries for t in q.terms})
-    blocks = _local_blocks_pandas(index, terms)
-    if blocks is None:
-        cand = _candidate_blocks(index, terms)
-        if cand is None:
-            return spark.createDataFrame([], HIT_SCHEMA)
-        raw = cand.collect()
-        if not raw:
-            return spark.createDataFrame([], HIT_SCHEMA)
-        blocks = pd.DataFrame([r.asDict() for r in raw])
-    if not len(blocks):
-        return spark.createDataFrame([], HIT_SCHEMA)
-    hits = _score_blocks_pd(index, blocks, queries)
-    if not len(hits):
-        return spark.createDataFrame([], HIT_SCHEMA)
-    return spark.createDataFrame(hits, schema=HIT_SCHEMA)
+    hits = _score_blocks_pd(index, _local_blocks_pandas(index, terms), queries)
+    return index.postings.sparkSession.createDataFrame(hits, schema=HIT_SCHEMA)
 
 
 def search_interactive(index: Index, text_or_terms, k: int = 10,
                        mode: str = "or"):
-    """Interactive single-query path: top-k BM25 entirely on the
-    coordinator — pyarrow read of the pruned bucket dirs + in-process
-    MAXSCORE, zero Spark jobs once the terms dictionary is warm. Returns
-    a PANDAS frame (doc_id, score), ordered (score desc, doc_id asc) —
-    the ES coordinator's JSON-response analog; rank-identical to
-    search() (pytest-pinned).
+    """Interactive single-query path: the local strategy returned as a
+    PANDAS frame (doc_id, score), ordered (score desc, doc_id asc) — the
+    ES coordinator's JSON-response analog; rank-identical to search()
+    (pytest-pinned). Zero Spark jobs on a committed segment once the
+    terms dictionary is warm.
 
-    Falls back to the Spark path when the segment is not disk-backed or
-    the candidate estimate exceeds LOCAL_MAX_POSTINGS (hot terms belong
-    on the executors — same cap discipline as search_many)."""
-    import pandas as pd
-
-    terms = (analysis.analyze(text_or_terms)
-             if isinstance(text_or_terms, str) else list(text_or_terms))
-    q = Query(0, terms, k, mode)
-    est = _estimate_postings(index, [q])
-    blocks = (_local_blocks_pandas(index, sorted(set(terms)))
-              if terms and est <= LOCAL_MAX_POSTINGS else None)
-    if blocks is None:
-        rows = search(index, terms, k=k, mode=mode).collect()
-        return pd.DataFrame(
-            [(int(r["doc_id"]), float(r["score"])) for r in rows],
-            columns=["doc_id", "score"])
-    hits = _score_blocks_pd(index, blocks, [q])
-    hits = hits.sort_values(["score", "doc_id"], ascending=[False, True],
-                            kind="mergesort")
-    return hits[["doc_id", "score"]].reset_index(drop=True)
+    Past LOCAL_MAX_POSTINGS the query runs on the executors through
+    search() (hot terms belong there — the same cap as search_many)."""
+    q = Query(0, _terms(text_or_terms), k, mode)
+    if _estimate_postings(index, [q]) > LOCAL_MAX_POSTINGS:
+        return search(index, q.terms, k=k, mode=mode).toPandas()
+    hits = _score_blocks_pd(index, _local_blocks_pandas(index, q.terms), [q])
+    return hits[["doc_id", "score"]]
 
 
 def _estimate_postings(index: Index, queries: list[Query]) -> int:
@@ -485,9 +460,12 @@ def _estimate_postings(index: Index, queries: list[Query]) -> int:
     return sum(meta[t][0] for q in queries for t in set(q.terms))
 
 
-def _search_distributed(index: Index, queries: list[Query]) -> DataFrame:
-    cand = _candidates(index, queries)
-    n_docs, avgdl, k1, b = index.stats.n_docs, index.stats.avgdl, index.k1, index.b
+def _scored_postings(cand: DataFrame, index: Index) -> DataFrame:
+    """The executor BM25 kernel: query-tagged posting blocks (_candidates)
+    -> (query_id, doc_id, term, score × weight), one row per posting.
+    One vectorized decode per Arrow batch over ALL its block rows (no
+    per-row Python — the r01 hot-path fix)."""
+    n_docs, avgdl, k1, b = _bm25_params(index)
 
     def decode_score(batches):
         import pandas as pd
@@ -495,8 +473,6 @@ def _search_distributed(index: Index, queries: list[Query]) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            # one vectorized pass over ALL block rows in the Arrow batch
-            # (no per-row Python — the r01 hot-path fix)
             counts = pdf["n_in_block"].to_numpy()
             ids, tfs, nrm = codec.decode_blocks_concat(
                 pdf["first_doc_id"].to_numpy(), pdf["docid_gaps"],
@@ -504,47 +480,52 @@ def _search_distributed(index: Index, queries: list[Query]) -> DataFrame:
             dlq = codec.byte4_to_int(nrm)
             idf = np.repeat(codec.bm25_idf(pdf["df"].to_numpy(), n_docs), counts)
             w = np.repeat(pdf["weight"].to_numpy(), counts)
-            sc = idf * codec.bm25_tf_weight(tfs, dlq, avgdl, k1, b) * w
             yield pd.DataFrame({
                 "query_id": np.repeat(pdf["query_id"].to_numpy(), counts),
-                "doc_id": ids, "score": sc,
+                "doc_id": ids,
                 "term": np.repeat(pdf["term"].to_numpy(), counts),
-                "k": np.repeat(pdf["k"].to_numpy(), counts),
-                "mode": np.repeat(pdf["mode"].to_numpy(), counts)})
+                "score": idf * codec.bm25_tf_weight(tfs, dlq, avgdl, k1, b) * w})
 
-    scored = cand.mapInPandas(
+    return cand.mapInPandas(
         decode_score,
-        schema="query_id long, doc_id long, score double, term string, k int, mode string",
-    )
-    agg = scored.groupBy("query_id", "doc_id").agg(
-        F.sum("score").alias("score"),
-        F.count(F.lit(1)).alias("nt"),
-        F.first("k").alias("k"),
-        F.first("mode").alias("mode"),
-    )
-    need = {q.query_id: len(set(q.terms)) for q in queries}
-    need_df = F.broadcast(
-        index.postings.sparkSession.createDataFrame(
-            [(qid, n) for qid, n in need.items()], "query_id long, need int"))
-    agg = agg.join(need_df, "query_id").where(
-        (F.col("mode") != "and") | (F.col("nt") == F.col("need")))
-    # per-query top-k: window rank (Spark pushes a per-partition bounded sort)
+        schema="query_id long, doc_id long, term string, score double")
+
+
+def _match_scores(index: Index, queries: list[Query]) -> DataFrame:
+    """(query_id, doc_id, score, k) for EVERY match of each query: the
+    executor kernel's postings summed per (query, doc), kept when the doc
+    holds `need` distinct query terms (all of them for mode=and, one for
+    or) — read from a broadcast (query_id, need, k) relation, not carried
+    on the posting rows."""
+    spec = index.postings.sparkSession.createDataFrame(
+        [(q.query_id, len(set(q.terms)) if q.mode == "and" else 1, q.k)
+         for q in queries], "query_id long, need int, k int")
+    agg = (_scored_postings(_candidates(index, queries), index)
+           .groupBy("query_id", "doc_id")
+           .agg(F.sum("score").alias("score"),
+                F.count(F.lit(1)).alias("nt")))
+    return (agg.join(F.broadcast(spec), "query_id")
+            .where(F.col("nt") >= F.col("need"))
+            .select("query_id", "doc_id", "score", "k"))
+
+
+def _search_distributed(index: Index, queries: list[Query]) -> DataFrame:
+    """Distributed strategy: per-query top-k over _match_scores by a window
+    rank (Spark pushes a per-partition bounded sort)."""
     from pyspark.sql import Window
+
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        agg.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= F.col("k"))
-        .select("query_id", "doc_id", "score")
-    )
+    return (_match_scores(index, queries)
+            .withColumn("rn", F.row_number().over(w))
+            .where(F.col("rn") <= F.col("k"))
+            .select("query_id", "doc_id", "score"))
 
 
 def search(index: Index, text_or_terms, k: int = 10, mode: str = "or",
            method: str = "auto") -> DataFrame:
     """Single query -> DataFrame(doc_id, score), top-k ordered."""
-    terms = (analysis.analyze(text_or_terms)
-             if isinstance(text_or_terms, str) else list(text_or_terms))
-    q = Query(0, terms, k, mode)
-    hits = search_many(index, [q], method=method)
+    hits = search_many(index, [Query(0, _terms(text_or_terms), k, mode)],
+                       method=method)
     return hits.select("doc_id", "score").orderBy(F.desc("score"), F.asc("doc_id"))
 
 
@@ -564,31 +545,10 @@ def fetch(index: Index, hits: DataFrame, verify_sha: bool = True) -> DataFrame:
 
 def _per_term_scored(index: Index, terms: list[str]) -> DataFrame:
     """(doc_id, term, score) — one row per matching (doc, clause), the
-    shared substrate for the compound scorers below (distributed path)."""
-    q = Query(0, terms, k=2**31 - 1, mode="or")
-    cand = _candidates(index, [q])
-    n_docs, avgdl, k1, b = index.stats.n_docs, index.stats.avgdl, index.k1, index.b
-
-    def decode_score(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            counts = pdf["n_in_block"].to_numpy()
-            ids, tfs, nrm = codec.decode_blocks_concat(
-                pdf["first_doc_id"].to_numpy(), pdf["docid_gaps"],
-                counts, pdf["tfs_enc"], pdf["norms_enc"])
-            dlq = codec.byte4_to_int(nrm)
-            idf = np.repeat(codec.bm25_idf(pdf["df"].to_numpy(), n_docs), counts)
-            sc = idf * codec.bm25_tf_weight(tfs, dlq, avgdl, k1, b)
-            yield pd.DataFrame({
-                "doc_id": ids,
-                "term": np.repeat(pdf["term"].to_numpy(), counts),
-                "score": sc})
-
-    return cand.mapInPandas(
-        decode_score, schema="doc_id long, term string, score double")
+    shared substrate for the compound scorers below: the executor BM25
+    kernel over the de-duplicated terms (weight 1)."""
+    cand = _candidates(index, [Query(0, sorted(set(terms)))])
+    return _scored_postings(cand, index).select("doc_id", "term", "score")
 
 
 def search_dis_max(index: Index, text_or_terms, k: int = 10,
@@ -596,9 +556,7 @@ def search_dis_max(index: Index, text_or_terms, k: int = 10,
     """dis_max query (SURVEY §2.4 q_dis_max): per-doc score =
     max(clause scores) + tie_breaker · Σ(other clauses).
     Reference: index/query/DisMaxQueryBuilder.java."""
-    terms = (analysis.analyze(text_or_terms)
-             if isinstance(text_or_terms, str) else list(text_or_terms))
-    scored = _per_term_scored(index, sorted(set(terms)))
+    scored = _per_term_scored(index, _terms(text_or_terms))
     agg = scored.groupBy("doc_id").agg(
         F.max("score").alias("mx"), F.sum("score").alias("sm"))
     score = F.col("mx") + tie_breaker * (F.col("sm") - F.col("mx"))
@@ -610,10 +568,7 @@ def search_constant_score(index: Index, text_or_terms, boost: float = 1.0,
                           mode: str = "or") -> DataFrame:
     """constant_score query (SURVEY §2.5): matching-doc set, score = boost,
     BM25 skipped entirely. Reference: ConstantScoreQueryBuilder.java."""
-    terms = (analysis.analyze(text_or_terms)
-             if isinstance(text_or_terms, str) else list(text_or_terms))
-    q = Query(0, terms, k=2**31 - 1, mode=mode)
-    hits = search_many(index, [q], method="distributed")
+    hits = _match_scores(index, [Query(0, _terms(text_or_terms), mode=mode)])
     # NO global orderBy: the full match set can be huge and the driver's
     # value hash is order-insensitive (r01 perf finding #5). Consumers
     # that need order sort the (small) slice they take.
@@ -627,10 +582,7 @@ def search_function_score(index: Index, text_or_terms, k: int = 10,
     §2.4 q_function_score): final = bm25 · ln(1 + len(content)/100).
     Reference: index/query/functionscore/FunctionScoreQueryBuilder.java,
     FieldValueFactorFunctionBuilder (modifier=ln1p)."""
-    terms = (analysis.analyze(text_or_terms)
-             if isinstance(text_or_terms, str) else list(text_or_terms))
-    q = Query(0, terms, k=2**31 - 1, mode=mode)
-    hits = search_many(index, [q], method="distributed")
+    hits = _match_scores(index, [Query(0, _terms(text_or_terms), mode=mode)])
     boosted = (hits.join(index.docs.select("doc_id", "content"), "doc_id")
                .withColumn("score",
                            F.col("score")
@@ -902,10 +854,7 @@ def search_function_score_decay(index: Index, text_or_terms, kind: str,
     carries). final = bm25 · decay(len). Reference:
     index/query/functionscore/DecayFunctionBuilder.java (GaussDecay /
     ExponentialDecay / LinearDecay)."""
-    terms = (analysis.analyze(text_or_terms)
-             if isinstance(text_or_terms, str) else list(text_or_terms))
-    q = Query(0, terms, k=2**31 - 1, mode=mode)
-    hits = search_many(index, [q], method="distributed")
+    hits = _match_scores(index, [Query(0, _terms(text_or_terms), mode=mode)])
     feat = index.docs.select(
         "doc_id", F.length("content").cast("double").alias("_x"))
     boosted = (hits.join(feat, "doc_id")
@@ -924,10 +873,7 @@ def search_random_score(index: Index, text_or_terms, seed: int = 42,
     sampling of the match set. ES hashes seed+doc _id; here the portable
     equivalent: first 8 hex chars of md5('<seed>:<doc_id>') / 2^32 —
     identical arithmetic in the DuckDB oracle."""
-    terms = (analysis.analyze(text_or_terms)
-             if isinstance(text_or_terms, str) else list(text_or_terms))
-    q = Query(0, terms, k=2**31 - 1, mode=mode)
-    hits = search_many(index, [q], method="distributed")
+    hits = _match_scores(index, [Query(0, _terms(text_or_terms), mode=mode)])
     r = (F.conv(F.substring(
             F.md5(F.concat_ws(":", F.lit(str(seed)),
                               F.col("doc_id").cast("string"))), 1, 8),
@@ -1015,6 +961,14 @@ def search_fuzzy(index: Index, term: str, max_dist: int = 2,
     return agg.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
+def _decoded_ids(cand: DataFrame) -> DataFrame:
+    """The executor docID-only kernel: posting blocks -> (doc_id, term),
+    one row per posting (counting and constant-score rewrites)."""
+    return (cand.select("term", "first_doc_id", "docid_gaps", "n_in_block")
+            .mapInPandas(lambda batches: (_ids_pd(p) for p in batches if len(p)),
+                         schema="doc_id long, term string"))
+
+
 def _multi_term_rewrite(index: Index, term_pred,
                         max_expansions: int) -> DataFrame:
     """Shared multi-term-query rewrite ([lucene dep] MultiTermQuery,
@@ -1025,32 +979,15 @@ def _multi_term_rewrite(index: Index, term_pred,
     boost 1.0). The expansion is a <= max_expansions-row driver collect
     (term asc, deterministic) — the coordinator-side rewrite, exactly
     where ES does it."""
-    import pandas as pd
-
-    spark = index.postings.sparkSession
     exp = (index.term_stats.select("term")
            .where(term_pred)
            .orderBy(F.asc("term")).limit(max_expansions).collect())
     terms = sorted(r["term"] for r in exp)
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
-    cand = _candidate_blocks(index, terms)
-    if cand is None:
-        return spark.createDataFrame([], "doc_id long, score double")
-    cand = cand.select("first_doc_id", "docid_gaps", "n_in_block")
-
-    def decode_ids(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids, _, _ = codec.decode_blocks_concat(
-                pdf["first_doc_id"].to_numpy(), pdf["docid_gaps"],
-                pdf["n_in_block"].to_numpy())
-            yield pd.DataFrame({"doc_id": ids})
-
-    rel = cand.mapInPandas(decode_ids, schema="doc_id long")
-    return (rel.distinct().withColumn("score", F.lit(1.0))
-            .orderBy("doc_id"))
+        return index.postings.sparkSession.createDataFrame(
+            [], "doc_id long, score double")
+    return (_decoded_ids(_candidate_blocks(index, terms)).select("doc_id")
+            .distinct().withColumn("score", F.lit(1.0)).orderBy("doc_id"))
 
 
 def search_wildcard(index: Index, pattern: str,
@@ -1087,60 +1024,19 @@ def search_regexp(index: Index, pattern: str,
 def count_matches(index: Index, text_or_terms, mode: str = "or") -> int:
     """_count analog ([lucene dep] TotalHitCountCollector): decodes docID
     gaps ONLY — no tf/norm decode and no BM25 arithmetic (r01 perf
-    finding: the old path scored every candidate just to count it)."""
-    import pandas as pd
-
-    terms = (analysis.analyze(text_or_terms)
-             if isinstance(text_or_terms, str) else list(text_or_terms))
-    uniq = sorted(set(terms))
+    finding: the old path scored every candidate just to count it).
+    Selective queries decode on the driver over the one driver-side block
+    read (no Spark job on a committed segment); past LOCAL_MAX_POSTINGS
+    the executor docID kernel counts."""
+    uniq = sorted(set(_terms(text_or_terms)))
     if not uniq:
         return 0
-    q = Query(0, uniq, k=1, mode=mode)
-
-    cand = _candidate_blocks(index, uniq)
-    if cand is None:
-        return 0
-    cand = cand.select("term", "first_doc_id", "docid_gaps", "n_in_block")
-
-    # selective queries: gather the (already tiny) gap columns straight
-    # to the driver — pyarrow read of the pruned bucket dirs for
-    # disk-backed segments (zero Spark jobs), else one narrow scan job
-    if _estimate_postings(index, [q]) <= LOCAL_MAX_POSTINGS:
-        blocks = _local_blocks_pandas(index, uniq)
-        if blocks is None:
-            blocks = pd.DataFrame(
-                [r.asDict() for r in cand.collect()],
-                columns=["term", "first_doc_id", "docid_gaps", "n_in_block"])
-        sets = []
-        for t, g in blocks.groupby("term", sort=False):
-            ids, _, _ = codec.decode_blocks_concat(
-                g["first_doc_id"].to_numpy(), g["docid_gaps"].tolist(),
-                g["n_in_block"].to_numpy())
-            sets.append(ids)
-        n_terms_present = blocks["term"].nunique()
-        if not sets:
-            return 0
-        if mode == "and":
-            if n_terms_present < len(uniq):
-                return 0
-            acc = sets[0]
-            for s in sets[1:]:
-                acc = np.intersect1d(acc, s, assume_unique=True)
-            return int(len(acc))
-        return int(len(np.unique(np.concatenate(sets))))
-
-    def decode_ids(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            counts = pdf["n_in_block"].to_numpy()
-            ids, _, _ = codec.decode_blocks_concat(
-                pdf["first_doc_id"].to_numpy(), pdf["docid_gaps"], counts)
-            yield pd.DataFrame({
-                "doc_id": ids,
-                "term": np.repeat(pdf["term"].to_numpy(), counts)})
-
-    rel = cand.mapInPandas(decode_ids, schema="doc_id long, term string")
+    if _estimate_postings(index, [Query(0, uniq)]) <= LOCAL_MAX_POSTINGS:
+        ids = _ids_pd(_local_blocks_pandas(index, uniq))["doc_id"].to_numpy()
+        # a doc holds each term at most once: its row count = terms matched
+        _, n = np.unique(ids, return_counts=True)
+        return int((n == len(uniq)).sum()) if mode == "and" else len(n)
+    rel = _decoded_ids(_candidate_blocks(index, uniq))
     if mode == "and":
         return (rel.groupBy("doc_id")
                 .agg(F.count_distinct("term").alias("nt"))

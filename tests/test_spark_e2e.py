@@ -1,6 +1,7 @@
 """End-to-end: Spark-built index answers rank-identical BM25 top-k vs the
-brute-force oracle (SURVEY §5.3), on the sf0.001 documents corpus, for both
-physical strategies (gather/MAXSCORE and distributed), with salting on."""
+brute-force oracle (SURVEY §5.3), on the sf0.001 documents corpus, for all
+three physical strategies (local and gather MAXSCORE, distributed), with
+salting on."""
 
 import numpy as np
 import pytest
@@ -29,11 +30,7 @@ def _oracle_topk(oracle_index, text, k, mode):
     return oracle_index.search(analysis.analyze(text), k=k, mode=mode)
 
 
-@pytest.mark.parametrize("text,k,mode", CASES)
-@pytest.mark.parametrize("method", ["gather", "distributed"])
-def test_topk_rank_and_score_identical(built_index, oracle_index, text, k, mode, method):
-    got = pexec.search(built_index, text, k=k, mode=mode, method=method).collect()
-    expect = _oracle_topk(oracle_index, text, k, mode)
+def _assert_oracle_identical(got, expect):
     assert [r["doc_id"] for r in got] == [d for d, _ in expect]
     gs = np.array([r["score"] for r in got])
     es = np.array([s for _, s in expect])
@@ -41,6 +38,39 @@ def test_topk_rank_and_score_identical(built_index, oracle_index, text, k, mode,
         np.testing.assert_allclose(gs, es, rtol=1e-12)
         # float32 parity: identical after cast (Lucene reports float32)
         assert np.array_equal(gs.astype(np.float32), es.astype(np.float32))
+
+
+@pytest.mark.parametrize("text,k,mode", CASES)
+@pytest.mark.parametrize("method", ["local", "gather", "distributed"])
+def test_topk_rank_and_score_identical(built_index, oracle_index, text, k, mode, method):
+    got = pexec.search(built_index, text, k=k, mode=mode, method=method).collect()
+    _assert_oracle_identical(got, _oracle_topk(oracle_index, text, k, mode))
+
+
+def test_auto_past_both_caps_matches_oracle(built_index, oracle_index, monkeypatch):
+    """With both caps at 0, method="auto" routes every query with a present
+    term to the distributed strategy (an all-absent query, Σdf = 0, stays
+    local) and still answers like the oracle."""
+    monkeypatch.setattr(pexec, "LOCAL_MAX_POSTINGS", 0)
+    monkeypatch.setattr(pexec, "GATHER_MAX_POSTINGS", 0)
+    for text, k, mode in [("merge", 10, "or"), ("zzzznotfound", 10, "or"),
+                          ("value table part hash", 10, "and"),
+                          ("value merge", 100, "or")]:
+        got = pexec.search(built_index, text, k=k, mode=mode).collect()
+        _assert_oracle_identical(got, _oracle_topk(oracle_index, text, k, mode))
+
+
+@pytest.mark.parametrize("text,mode", [("merge sort", "or"), ("merge sort", "and"),
+                                       ("value table part hash", "and")])
+def test_constant_score_keeps_every_match(built_index, oracle_index, text, mode):
+    """The pinned scorers keep the whole match set (no top-k): no Window
+    in the executed plan, and exactly the oracle's matching docs."""
+    df = pexec.search_constant_score(built_index, text, boost=2.0, mode=mode)
+    assert "Window" not in df._jdf.queryExecution().executedPlan().toString()
+    got = df.collect()
+    assert sorted(r["doc_id"] for r in got) == sorted(
+        d for d, _ in _oracle_topk(oracle_index, text, 10**9, mode))
+    assert {r["score"] for r in got} <= {2.0}
 
 
 def test_salting_actually_happened(built_index):

@@ -7,10 +7,10 @@ Models the reference's bulk-index path (SURVEY §3.2) Spark-first:
     ├──▶ tf           groupBy(doc_id, term)  [map-side partial agg]
     ├──▶ term_stats   groupBy(term): df, cf  +  n_salts for hot terms
     ├──▶ stats        N, sum_dl, avgdl  (1 row, broadcast as literals)
-    └──▶ postings     shuffle by (term, salt) ──applyInPandas──▶
+    └──▶ postings     shuffle by (term, salt) ──mapInPandas──▶
                       128-doc blocks: delta+varint docIDs, varint tfs,
                       raw norm bytes, block-max impacts
-                      bucketed by xxhash64(term) % n_buckets
+                      bucketed by crc32(term) % n_buckets
 
 Reference anchors: TransportShardBulkAction / InternalEngine#index /
 OperationRouting#shardId (routing hash ≙ our term-hash repartition);
@@ -24,8 +24,13 @@ Scale notes (the 100 TB plan):
   - hot terms are salted (`df > salt_threshold` -> n_salts sub-lists keyed
     by pmod(doc_id, n_salts)) so no single task encodes a whole Zipf-head
     posting list; query-side merge is a concat (disjoint doc ranges).
-  - postings land partitioned by bucket = pmod(xxhash64(term), n_buckets):
-    query-time term lookups prune to 1 bucket per term (file skipping).
+  - postings and positions land partitioned by ONE bucket rule,
+    bucket = crc32(term) % n_buckets (bucket_col; Index.bucket computes
+    the same value on the driver): query-time term lookups prune to 1
+    bucket per term (file skipping) with no Spark job to find it.
+  - build_index, merge_indexes and versioning.compact write postings
+    through one encoder (encode_postings) and salt through one rule
+    (with_n_salts).
   - per-bucket lineage rows (docs/postings/bytes) are written with the
     segment; the build is resumable: finished tables (with _SUCCESS) skip.
 """
@@ -35,6 +40,7 @@ from __future__ import annotations
 import json
 import os
 import time
+import zlib
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
@@ -61,9 +67,7 @@ POSTINGS_SCHEMA = T.StructType([
 ])
 
 #: positional postings — one row per (term, doc): positions of every
-#: occurrence, ascending. The bucket uses crc32 (not xxhash64) so the
-#: COORDINATOR can compute a term's bucket in pure Python (zlib.crc32)
-#: and emit the partition-pruning predicate without an extra Spark job.
+#: occurrence, ascending, in the same bucket as the term's postings.
 POSITIONS_SCHEMA = T.StructType([
     T.StructField("term", T.StringType(), False),
     T.StructField("doc_id", T.LongType(), False),
@@ -72,17 +76,17 @@ POSITIONS_SCHEMA = T.StructType([
 ])
 
 
-def pos_bucket_col(term_col, n_buckets: int):
-    """Spark column: positional-index bucket of a term column."""
+#: the segment's term -> bucket rule, recorded in manifest.json;
+#: load_index refuses a segment written under any other rule.
+BUCKET_RULE = "crc32(term) % n_buckets"
+
+
+def bucket_col(term_col, n_buckets: int):
+    """Spark column: the segment bucket of a term column (BUCKET_RULE),
+    for postings and positions alike. crc32 rather than a JVM-only hash
+    so the COORDINATOR computes the same bucket in pure Python
+    (Index.bucket) and prunes to it without a Spark job."""
     return F.pmod(F.crc32(term_col.cast("binary")), F.lit(n_buckets)).cast("int")
-
-
-def pos_bucket_of(term: str, n_buckets: int) -> int:
-    """Driver-side bucket of a literal term — matches pos_bucket_col
-    exactly (Spark crc32 == zlib.crc32 on UTF-8 bytes)."""
-    import zlib
-
-    return zlib.crc32(term.encode("utf-8")) % n_buckets
 
 
 def positions_frame(flat: DataFrame, n_buckets: int) -> DataFrame:
@@ -100,7 +104,7 @@ def positions_frame(flat: DataFrame, n_buckets: int) -> DataFrame:
     the bucket partition pruning."""
     grouped = (flat.groupBy("term", "doc_id")
                .agg(F.sort_array(F.collect_list("pos")).alias("poss"))
-               .withColumn("bucket", pos_bucket_col(F.col("term"), n_buckets))
+               .withColumn("bucket", bucket_col(F.col("term"), n_buckets))
                .select("term", "doc_id", "poss", "bucket"))
     return (grouped.repartition(n_buckets, "bucket")
             .sortWithinPartitions("term", "doc_id"))
@@ -130,9 +134,40 @@ class Index:
     positions: DataFrame | None = None  # POSITIONS_SCHEMA (phrase family)
     disk_path: str | None = None  # committed segment dir (set by load_index)
 
-    def pos_bucket(self, term: str) -> int:
-        """The positions-table bucket of a term in this segment."""
-        return pos_bucket_of(term, self.n_buckets)
+    def bucket(self, term: str) -> int:
+        """The bucket of a term in this segment's postings and positions
+        — bucket_col on the driver (Spark crc32 == zlib.crc32 of the
+        UTF-8 bytes)."""
+        return zlib.crc32(term.encode("utf-8")) % self.n_buckets
+
+    def term_rows(self, table: str, terms) -> DataFrame:
+        """Spark-side pruned scan of the postings or positions table:
+        the terms' bucket IN-list (partition pruning on a committed
+        segment) and their term IN-list (row-group pruning)."""
+        terms = sorted(set(terms))
+        return getattr(self, table).where(
+            F.col("bucket").isin(sorted({self.bucket(t) for t in terms}))
+            & F.col("term").isin(terms))
+
+    def term_scanner(self, table: str, terms, columns: list[str]):
+        """Driver-side twin of term_rows on a committed segment: a pyarrow
+        scanner of `columns` over the terms' bucket=N dirs, filtered to
+        the terms — no Spark job. None when none of those dirs exists.
+        (A scanner, not Dataset.filter: the same read measured ~0.2 ms a
+        call slower through Dataset.filter.)"""
+        import glob
+
+        import pyarrow.dataset as ds
+
+        terms = sorted(set(terms))
+        files = sorted(
+            f for b in sorted({self.bucket(t) for t in terms})
+            for f in glob.glob(os.path.join(self.disk_path, table,
+                                            f"bucket={b}", "*.parquet")))
+        if not files:
+            return None
+        return ds.dataset(files, format="parquet").scanner(
+            columns=columns, filter=ds.field("term").isin(terms))
 
     def unpersist(self) -> None:
         """Release the build-side caches (once the segment is committed
@@ -217,9 +252,10 @@ def tokenize(corpus: DataFrame, tokenizer: str = "native") -> DataFrame:
 def encode_partition_kernel(n_docs: int, avgdl: float, k1: float, b: float):
     """mapInPandas kernel: posting-grain rows (doc_id, tf, dl_byte,
     term, salt, df), sorted by (term, salt) within the partition, ->
-    encoded block rows (POSTINGS_SCHEMA). Runs straddling an Arrow
-    batch boundary are carried into the next batch. Shared by
-    build_index, merge_indexes' re-salt path and versioning.compact."""
+    encoded block rows (POSTINGS_SCHEMA, bucket set by encode_postings).
+    Runs straddling an Arrow batch boundary are carried into the next
+    batch. The one block encoder: encode_postings runs it, and so does
+    merge_indexes' fast path over decoded block rows."""
 
     def encode_partition(batches):
         import numpy as np
@@ -234,7 +270,7 @@ def encode_partition_kernel(n_docs: int, avgdl: float, k1: float, b: float):
                                          idf, avgdl, k1, b):
                 r["term"] = term
                 r["salt"] = salt
-                r["bucket"] = 0  # filled by caller (needs xxhash64 = JVM)
+                r["bucket"] = 0  # bucket_col fills it
                 r["df"] = df_global
                 out.append(r)
 
@@ -272,6 +308,42 @@ def encode_partition_kernel(n_docs: int, avgdl: float, k1: float, b: float):
             yield pd.DataFrame(rows, columns=cols)
 
     return encode_partition
+
+
+def with_n_salts(term_stats: DataFrame, meta: dict) -> DataFrame:
+    """term_stats (term, df, ...) + n_salts: the one salting rule. A
+    term with df > meta's salt_threshold is split into meta's n_salts
+    sub-lists keyed by pmod(doc_id, n_salts), so no single task encodes
+    a whole Zipf-head posting list; every other term is one list."""
+    return term_stats.withColumn(
+        "n_salts",
+        F.when(F.col("df") > meta["salt_threshold"], F.lit(meta["n_salts"]))
+        .otherwise(F.lit(1)))
+
+
+def encode_postings(rows: DataFrame, stats: Stats, k1: float, b: float,
+                    n_buckets: int) -> DataFrame:
+    """The one postings writer (build_index, merge_indexes' re-salt path,
+    versioning.compact): posting-grain rows (doc_id, term, tf, df,
+    dl_byte, n_salts) -> POSTINGS_SCHEMA block rows.
+
+    Each row gets salt = pmod(doc_id, n_salts); only the kernel's columns
+    cross the (term, salt) exchange (n_salts does not). Encoding is
+    partition-wise, not group-wise: a sort within partitions makes each
+    (term, salt) run contiguous and Arrow batches stream through ONE
+    mapInPandas kernel per partition. applyInPandas would pay per-group
+    Arrow/pandas overhead (~10 ms × |vocab| groups dominated the build);
+    here the overhead is per batch and the per-term work is pure numpy.
+    Block rows are tagged with bucket_col."""
+    keyed = rows.select(
+        "doc_id", "term", F.col("tf").cast("int").alias("tf"), "df",
+        "dl_byte", F.pmod("doc_id", "n_salts").cast("int").alias("salt"))
+    n_parts = int(rows.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return (keyed.repartition(n_parts, "term", "salt")
+            .sortWithinPartitions("term", "salt")
+            .mapInPandas(encode_partition_kernel(stats.n_docs, stats.avgdl, k1, b),
+                         schema=POSTINGS_SCHEMA)
+            .withColumn("bucket", bucket_col(F.col("term"), n_buckets)))
 
 
 def build_index(
@@ -340,14 +412,11 @@ def build_index(
         tf = tf.persist(StorageLevel.DISK_ONLY)
 
     # ---- per-term global stats + salting decision
-    term_stats = (
-        tf.groupBy("term")
-        .agg(F.count("*").alias("df"), F.sum("tf").alias("cf"))
-        .withColumn(
-            "n_salts",
-            F.when(F.col("df") > salt_threshold, F.lit(n_salts)).otherwise(F.lit(1)),
-        )
-    )
+    meta = {"tokenizer": tokenizer, "salt_threshold": salt_threshold,
+            "n_salts": n_salts}
+    term_stats = with_n_salts(
+        tf.groupBy("term").agg(F.count("*").alias("df"), F.sum("tf").alias("cf")),
+        meta)
     if cache:
         term_stats = term_stats.persist()
 
@@ -361,34 +430,8 @@ def build_index(
     dl_side = docs.select("doc_id", "dl_byte")
     if broadcast_dims:
         dims, dl_side = F.broadcast(dims), F.broadcast(dl_side)
-    enriched = (
-        tf.join(dims, "term")
-        .join(dl_side, "doc_id")
-        .withColumn("salt", F.pmod(F.col("doc_id"), F.col("n_salts")).cast("int"))
-        # exchange only what the kernel needs: n_salts never crosses the wire
-        .select("doc_id", "term", F.col("tf").cast("int").alias("tf"),
-                "df", "dl_byte", "salt")
-    )
-
-    n_docs, avgdl = stats.n_docs, stats.avgdl
-
-    # Encode partition-wise, not group-wise: repartition by (term, salt)
-    # then sort within partitions so each (term, salt) run is contiguous,
-    # and stream Arrow batches through ONE mapInPandas kernel per
-    # partition. applyInPandas would pay per-group Arrow/pandas overhead
-    # (~10 ms × |vocab| groups dominated the build); here the overhead is
-    # per 64k-row batch and the per-term work is pure numpy. Groups that
-    # straddle a batch boundary are carried into the next batch.
-    n_parts = int(enriched.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    sorted_parts = (enriched.repartition(n_parts, "term", "salt")
-                    .sortWithinPartitions("term", "salt"))
-
-    postings = (
-        sorted_parts.mapInPandas(
-            encode_partition_kernel(n_docs, avgdl, k1, b),
-            schema=POSTINGS_SCHEMA)
-        .withColumn("bucket",
-                    F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")))
+    postings = encode_postings(tf.join(dims, "term").join(dl_side, "doc_id"),
+                               stats, k1, b, n_buckets)
     if cache:
         postings = postings.persist()
 
@@ -405,9 +448,7 @@ def build_index(
     return Index(
         docs=docs, postings=postings, term_stats=term_stats, stats=stats,
         k1=k1, b=b, n_buckets=n_buckets,
-        meta={"tokenizer": tokenizer, "salt_threshold": salt_threshold,
-              "n_salts": n_salts},
-        positions=pos_df,
+        meta=meta, positions=pos_df,
     )
 
 
@@ -471,6 +512,7 @@ def write_index(index: Index, out_dir: str, resume: bool = True) -> dict:
         "k1": index.k1,
         "b": index.b,
         "n_buckets": index.n_buckets,
+        "bucket_rule": BUCKET_RULE,
         "meta": index.meta,
         "tables_written": wrote,
         "build_wall_sec": round(time.time() - t0, 3),
@@ -483,8 +525,15 @@ def write_index(index: Index, out_dir: str, resume: bool = True) -> dict:
 
 
 def load_index(spark: SparkSession, out_dir: str) -> Index:
+    """Reopen a committed segment. A segment whose manifest records no
+    or another bucket rule is refused: its term lookups would prune to
+    the wrong bucket dirs and silently miss every hit."""
     with open(os.path.join(out_dir, "manifest.json")) as f:
         m = json.load(f)
+    if m.get("bucket_rule") != BUCKET_RULE:
+        raise ValueError(
+            f"segment {out_dir} was written with bucket rule "
+            f"{m.get('bucket_rule')!r}, not {BUCKET_RULE!r}: rebuild it")
     pos_path = os.path.join(out_dir, "positions")
     return Index(
         docs=spark.read.parquet(os.path.join(out_dir, "docs")),

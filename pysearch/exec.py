@@ -6,10 +6,10 @@ Models the reference's query-then-fetch lifecycle (SURVEY §3.1):
   -> global top-k (score desc, doc_id asc)  -> fetch phase (join docs).
 
 One driver-side block read (_local_blocks_pandas): a pyarrow read of the
-pruned bucket dirs of a committed segment — no Spark job once the terms
-dictionary is warm — or one narrow collect of the same bucket+term-pruned
-scan for an in-memory segment. Three physical strategies, auto-selected
-by the Σdf estimate over the query terms (search_many):
+pruned bucket dirs of a committed segment (Index.term_scanner — no Spark
+job) or one narrow collect of the same bucket+term-pruned scan
+(Index.term_rows) for an in-memory segment. Three physical strategies,
+auto-selected by the Σdf estimate over the query terms (search_many):
 
   * 'local' (Σdf <= LOCAL_MAX_POSTINGS) — the driver-side block read,
     scored in process by the numpy MAXSCORE/block-max kernel
@@ -251,20 +251,19 @@ def _queries_df(index: Index, queries: list[Query]):
         rows, "query_id long, term string, weight double")
 
 
-def term_meta(index: Index, terms: list[str]) -> dict[str, tuple[int, int]]:
-    """term -> (df, bucket) from term_stats, memoized on the Index.
+def term_meta(index: Index, terms: list[str]) -> dict[str, int]:
+    """term -> df from term_stats (0 when absent), memoized on the Index.
 
-    One tiny Spark job resolves ALL missing terms of a query at once
-    (df for selectivity estimation + WAND, bucket = pmod(xxhash64, P) for
-    partition pruning — xxhash64 lives JVM-side only). Repeat queries hit
-    the cache and schedule zero extra jobs. ES analog: the terms
-    dictionary lookup that precedes posting iteration.
+    One tiny Spark job resolves ALL missing terms of a query at once (df
+    for selectivity estimation + WAND; a term's bucket needs no lookup,
+    Index.bucket computes it on the driver). Repeat queries hit the
+    cache and schedule zero extra jobs. ES analog: the terms dictionary
+    lookup that precedes posting iteration.
 
     The cache lives as a plain instance attribute, NOT inside Index.meta:
     meta is serialized into manifest.json by write_index and shallow-copied
-    by merge_indexes, so a meta-resident cache would leak stale negative
-    entries ((0,-1) for absent terms) across merges/loads and silently
-    drop those terms' buckets from the candidate IN-list.
+    by merge_indexes, so a meta-resident cache would leak stale entries
+    (df 0 for absent terms) across merges/loads.
 
     Small indexes load the ENTIRE term dictionary on first touch (one job
     instead of one per new query's term set — halves the per-query job
@@ -272,46 +271,27 @@ def term_meta(index: Index, terms: list[str]) -> dict[str, tuple[int, int]]:
     cache = index.__dict__.setdefault("_term_cache", {})
     missing = [t for t in terms if t not in cache]
     if missing and not index.__dict__.get("_term_cache_full"):
-        sel = index.term_stats.select(
-            "term", "df",
-            F.pmod(F.xxhash64("term"), F.lit(index.n_buckets))
-            .cast("int").alias("bucket"))
+        sel = index.term_stats.select("term", "df")
         n_terms = index.__dict__.get("_n_terms")
         if n_terms is None:
             n_terms = index.term_stats.count()
             index.__dict__["_n_terms"] = n_terms
-        if n_terms <= TERM_DICT_CACHE_MAX:
-            for r in sel.collect():
-                cache[r["term"]] = (int(r["df"]), int(r["bucket"]))
-            index.__dict__["_term_cache_full"] = True
-        else:
-            for r in sel.where(F.col("term").isin(missing)).collect():
-                cache[r["term"]] = (int(r["df"]), int(r["bucket"]))
+        full = n_terms <= TERM_DICT_CACHE_MAX
+        if not full:
+            sel = sel.where(F.col("term").isin(missing))
+        for r in sel.collect():
+            cache[r["term"]] = int(r["df"])
+        index.__dict__["_term_cache_full"] = full
     for t in terms:
-        cache.setdefault(t, (0, -1))  # absent from the index
+        cache.setdefault(t, 0)  # absent from the index
     return {t: cache[t] for t in terms}
-
-
-def _candidate_blocks(index: Index, terms: list[str]) -> DataFrame:
-    """Bucket+term-pruned narrow scan of posting blocks, with NO
-    query-relation join (empty when no query term exists in the index).
-
-    Bucket pruning: the IN-list on `bucket` prunes parquet partitions when
-    the postings table is disk-backed (postings are partitionBy(bucket))."""
-    terms = sorted(set(terms))
-    meta = term_meta(index, terms)
-    buckets = sorted({b for _, b in meta.values() if b >= 0})
-    if not buckets:
-        return index.postings.where(F.lit(False))
-    return index.postings.where(
-        F.col("bucket").isin(buckets) & F.col("term").isin(terms))
 
 
 def _candidates(index: Index, queries: list[Query]) -> DataFrame:
     """Posting blocks for all query terms, tagged with query_id/weight by a
     broadcast join with the query relation (the executor strategies)."""
-    terms = sorted({t for q in queries for t in q.terms})
-    return _candidate_blocks(index, terms).join(
+    terms = {t for q in queries for t in q.terms}
+    return index.term_rows("postings", terms).join(
         F.broadcast(_queries_df(index, queries)), "term")
 
 
@@ -373,32 +353,21 @@ def _local_blocks_pandas(index: Index, terms: list[str]):
     search_interactive and count_matches.
 
     Committed segments (Index.disk_path, set by build.load_index) are read
-    with PYARROW: the bucket of each term comes from the term_meta cache,
-    the matching bucket=N parquet dirs are opened directly and the term
-    equality filter prunes row groups via parquet statistics — the same
-    pruning the Spark plan does, minus the job. ZERO Spark jobs once the
-    terms dictionary is warm (the 0.2-0.4 s selective-query floor was job
-    dispatch around a scan that lands on the driver anyway). In-memory
-    segments take one narrow collect of the same pruned scan."""
-    import glob
-    import os
-
+    with PYARROW (Index.term_scanner): the terms' bucket=N parquet dirs
+    are opened directly and the term filter prunes row groups via parquet
+    statistics — the same pruning the Spark plan does, minus the job.
+    ZERO Spark jobs (the 0.2-0.4 s selective-query floor was job dispatch
+    around a scan that lands on the driver anyway). In-memory segments
+    take one narrow collect of the same pruned scan (Index.term_rows)."""
     import pandas as pd
 
-    terms = sorted(set(terms))
     if index.disk_path is None:
-        rows = _candidate_blocks(index, terms).select(*BLOCK_COLS).collect()
+        rows = index.term_rows("postings", terms).select(*BLOCK_COLS).collect()
         return pd.DataFrame([tuple(r) for r in rows], columns=BLOCK_COLS)
-    import pyarrow.dataset as ds
-
-    buckets = sorted({b for _, b in term_meta(index, terms).values() if b >= 0})
-    files = sorted(f for b in buckets for f in glob.glob(os.path.join(
-        index.disk_path, "postings", f"bucket={b}", "*.parquet")))
-    if not files:
+    scanner = index.term_scanner("postings", terms, BLOCK_COLS)
+    if scanner is None:
         return pd.DataFrame(columns=BLOCK_COLS)
-    return (ds.dataset(files, format="parquet")
-            .to_table(columns=BLOCK_COLS, filter=ds.field("term").isin(terms))
-            .to_pandas())
+    return scanner.to_table().to_pandas()
 
 
 def _score_blocks_pd(index: Index, blocks, queries: list[Query]):
@@ -457,7 +426,7 @@ def _estimate_postings(index: Index, queries: list[Query]) -> int:
     Served from the term_meta cache (shares its one lookup job)."""
     terms = sorted({t for q in queries for t in q.terms})
     meta = term_meta(index, terms)
-    return sum(meta[t][0] for q in queries for t in set(q.terms))
+    return sum(meta[t] for q in queries for t in set(q.terms))
 
 
 def _scored_postings(cand: DataFrame, index: Index) -> DataFrame:
@@ -653,14 +622,12 @@ def _term_positions_leg(index: Index, term: str) -> DataFrame:
     """(doc_id, pos) occurrences of one term, preferring the segment's
     PERSISTED positional postings ([lucene dep] Lucene84PostingsWriter's
     position stream): bucket partition-pruned scan (one bucket dir,
-    Index.pos_bucket) + term predicate pushdown + array explode — never
+    Index.term_rows) + term predicate pushdown + array explode — never
     a corpus re-tokenize. Falls back to deriving positions from the
     forward index only when the segment was built without them
     (in-memory test segments)."""
     if index.positions is not None:
-        return (index.positions
-                .where((F.col("bucket") == index.pos_bucket(term))
-                       & (F.col("term") == term))
+        return (index.term_rows("positions", [term])
                 .select("doc_id", F.explode("poss").alias("pos")))
     return (_positions_rel(index).where(F.col("term") == term)
             .select("doc_id", "pos"))
@@ -903,12 +870,12 @@ def search_multi_match_cross(field_indexes: dict[str, "Index"],
     n_docs = idxs[0].stats.n_docs
     field_df = {fname: term_meta(fidx, terms)
                 for fname, fidx in field_indexes.items()}
-    df_blend = {t: max(field_df[f][t][0] for f in field_indexes)
+    df_blend = {t: max(field_df[f][t] for f in field_indexes)
                 for t in terms}
     per_field = []
     for fname, fidx in field_indexes.items():
         w = float(boosts.get(fname, 1.0))
-        present = [t for t in terms if field_df[fname][t][0] > 0]
+        present = [t for t in terms if field_df[fname][t] > 0]
         if not present:
             continue
         scored = _per_term_scored(fidx, present)
@@ -916,7 +883,7 @@ def search_multi_match_cross(field_indexes: dict[str, "Index"],
         # (scored only ever contains `present` terms, base 0.0 unreachable)
         scale = F.lit(0.0)
         for t in present:
-            idf_f = float(codec.bm25_idf(field_df[fname][t][0], n_docs))
+            idf_f = float(codec.bm25_idf(field_df[fname][t], n_docs))
             idf_b = float(codec.bm25_idf(df_blend[t], n_docs))
             scale = (F.when(F.col("term") == t, F.lit(w * idf_b / idf_f))
                      .otherwise(scale))
@@ -986,7 +953,7 @@ def _multi_term_rewrite(index: Index, term_pred,
     if not terms:
         return index.postings.sparkSession.createDataFrame(
             [], "doc_id long, score double")
-    return (_decoded_ids(_candidate_blocks(index, terms)).select("doc_id")
+    return (_decoded_ids(index.term_rows("postings", terms)).select("doc_id")
             .distinct().withColumn("score", F.lit(1.0)).orderBy("doc_id"))
 
 
@@ -1036,7 +1003,7 @@ def count_matches(index: Index, text_or_terms, mode: str = "or") -> int:
         # a doc holds each term at most once: its row count = terms matched
         _, n = np.unique(ids, return_counts=True)
         return int((n == len(uniq)).sum()) if mode == "and" else len(n)
-    rel = _decoded_ids(_candidate_blocks(index, uniq))
+    rel = _decoded_ids(index.term_rows("postings", uniq))
     if mode == "and":
         return (rel.groupBy("doc_id")
                 .agg(F.count_distinct("term").alias("nt"))

@@ -487,10 +487,8 @@ def q_combined_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     for fname, w in _CF_FIELDS.items():
         seg = store.segment_index(spark, sf_dir, fname)
         pt = seg.positions
-        cf_buckets = sorted({seg.pos_bucket(t) for t in _CF_TERMS})
         tf_parts.append(
-            pt.where(F.col("bucket").isin(cf_buckets)
-                     & F.col("term").isin(*_CF_TERMS))
+            seg.term_rows("positions", _CF_TERMS)
             .select("doc_id", "term",
                     (F.size("poss") * F.lit(w)).cast("double").alias("wtf")))
         dl_parts.append(

@@ -16,65 +16,70 @@ Two paths, chosen per term:
 
   * FAST (salt keys stable: every input segment salted the term with the
     same n_salts as the merged index wants): encoded block rows shuffle
-    by (term, salt) — ~1-2 bytes/posting on the wire — then a
-    partition-wise mapInPandas kernel decodes each (term, salt) run,
-    re-sorts, and re-encodes with the merged idf. Max task grain = one
-    salt sub-list of one term.
+    by (term, salt) — ~1-2 bytes/posting on the wire — then ONE
+    mapInPandas kernel per partition decodes them (the
+    decode_to_posting_rows generator) straight into the build's block
+    encoder (build.encode_partition_kernel), with the merged idf. Max
+    task grain = one salt sub-list of one term.
   * RE-SALT (a term's df crossed the salt threshold, or segments
     disagree): blocks are decoded to posting-grain rows first
-    (vectorized decode_blocks_concat), the new salt = doc_id % n_salts'
-    is attached, and the rows flow through THE SAME
-    repartition(term, salt) + sortWithinPartitions + encode kernel the
-    build path uses (build.encode_partition_kernel).
+    (vectorized decode_blocks_concat) and flow through the build's
+    postings writer (build.encode_postings), which salts them with the
+    merged n_salts.
 
 Invariant (tested): merge(build(A), build(B)) is BYTE-IDENTICAL to
-build(A ∪ B) — same blocks, same impacts, same salting — because salting
-is a pure function of the merged df and block framing is a pure function
-of the sorted docID list.
+build(A ∪ B) — same blocks, same impacts, same salting, same buckets —
+because salting is a pure function of the merged df, block framing a
+pure function of the sorted docID list, and the bucket a pure function
+of the term.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession, functions as F
+from functools import reduce
+
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import codec
-from .build import (DEFAULT_N_SALTS, DEFAULT_SALT_THRESHOLD, POSTINGS_SCHEMA,
-                    Index, Stats, encode_partition_kernel)
+from .build import (POSTINGS_SCHEMA, Index, Stats, bucket_col,
+                    encode_partition_kernel, encode_postings, with_n_salts)
 
 
-_CARRY_TYPES = {"df": "df long", "n_salts": "n_salts int"}
+_CARRY_TYPES = {"df": "df long", "n_salts": "n_salts int", "salt": "salt int"}
 
 
-def decode_to_posting_rows(posts, carry: tuple[str, ...] = ()):
+def _decoded(batches, carry: tuple[str, ...]):
+    """Generator: Arrow batches of encoded block rows -> posting-grain
+    pandas frames (term, doc_id, tf, dl_byte [+ carry columns repeated
+    per posting]). One varint pass over each batch's concatenated
+    buffers (codec.decode_blocks_concat), no per-row Python."""
+    import numpy as np
+    import pandas as pd
+
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        counts = pdf["n_in_block"].to_numpy()
+        ids, tfs, nrm = codec.decode_blocks_concat(
+            pdf["first_doc_id"].to_numpy(), pdf["docid_gaps"],
+            counts, pdf["tfs_enc"], pdf["norms_enc"])
+        data = {
+            "term": np.repeat(pdf["term"].to_numpy(), counts),
+            "doc_id": ids, "tf": tfs,
+            "dl_byte": nrm.astype(np.int32)}
+        for c in carry:
+            data[c] = np.repeat(pdf[c].to_numpy(), counts)
+        yield pd.DataFrame(data)
+
+
+def decode_to_posting_rows(posts: DataFrame, carry: tuple[str, ...] = ()):
     """Encoded block rows -> posting-grain rows (term, doc_id, tf,
-    dl_byte [+ carry columns repeated per posting]). Vectorized decode:
-    one varint pass over each Arrow batch's concatenated buffers
-    (codec.decode_blocks_concat), no per-row Python. Shared by
-    merge_indexes' re-salt path and versioning.compact's delete-dropping
-    rewrite ([lucene dep] SegmentMerger reads postings the same way)."""
+    dl_byte [+ carry columns]). Shared by merge_indexes' re-salt path
+    and versioning.compact's delete-dropping rewrite ([lucene dep]
+    SegmentMerger reads postings the same way)."""
     schema = ("term string, doc_id long, tf long, dl_byte int"
               + "".join(f", {_CARRY_TYPES[c]}" for c in carry))
-
-    def kernel(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            counts = pdf["n_in_block"].to_numpy()
-            ids, tfs, nrm = codec.decode_blocks_concat(
-                pdf["first_doc_id"].to_numpy(), pdf["docid_gaps"],
-                counts, pdf["tfs_enc"], pdf["norms_enc"])
-            data = {
-                "term": np.repeat(pdf["term"].to_numpy(), counts),
-                "doc_id": ids, "tf": tfs,
-                "dl_byte": nrm.astype(np.int32)}
-            for c in carry:
-                data[c] = np.repeat(pdf[c].to_numpy(), counts)
-            yield pd.DataFrame(data)
-
-    return posts.mapInPandas(kernel, schema=schema)
+    return posts.mapInPandas(lambda it: _decoded(it, carry), schema=schema)
 
 
 #: merged-vocab row count above which the term-dim join stops being
@@ -99,29 +104,20 @@ def merge_indexes(spark: SparkSession, indexes: list[Index], *,
     assert indexes, "need at least one index"
     k1, b = indexes[0].k1, indexes[0].b
     n_buckets = indexes[0].n_buckets
-    salt_threshold = indexes[0].meta.get("salt_threshold", DEFAULT_SALT_THRESHOLD)
-    n_salts_cfg = indexes[0].meta.get("n_salts", DEFAULT_N_SALTS)
 
-    docs = indexes[0].docs
-    for ix in indexes[1:]:
-        docs = docs.unionByName(ix.docs)
+    def union(frames):
+        return reduce(DataFrame.unionByName, frames)
 
+    docs = union(ix.docs for ix in indexes)
     stats = Stats(
         n_docs=sum(ix.stats.n_docs for ix in indexes),
         sum_dl=sum(ix.stats.sum_dl for ix in indexes),
     )
 
-    term_stats = indexes[0].term_stats.select("term", "df", "cf")
-    for ix in indexes[1:]:
-        term_stats = term_stats.unionByName(ix.term_stats.select("term", "df", "cf"))
-    term_stats = (
-        term_stats.groupBy("term")
-        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-        .withColumn(
-            "n_salts",
-            F.when(F.col("df") > salt_threshold, F.lit(n_salts_cfg))
-            .otherwise(F.lit(1)))
-    )
+    term_stats = with_n_salts(
+        union(ix.term_stats.select("term", "df", "cf") for ix in indexes)
+        .groupBy("term").agg(F.sum("df").alias("df"), F.sum("cf").alias("cf")),
+        indexes[0].meta)
     if cache:
         term_stats = term_stats.persist()
 
@@ -136,10 +132,9 @@ def merge_indexes(spark: SparkSession, indexes: list[Index], *,
     # mirrors build_index's escape hatch (r02 advice): at vocabularies
     # beyond the broadcast cap pass False and Catalyst picks a shuffle
     # join co-partitioned with the (term, salt) encode exchange.
-    seg_salts = None
-    for ix in indexes:
-        old = ix.term_stats.select("term", F.col("n_salts").alias("old_n_salts"))
-        seg_salts = old if seg_salts is None else seg_salts.unionByName(old)
+    seg_salts = union(
+        ix.term_stats.select("term", F.col("n_salts").alias("old_n_salts"))
+        for ix in indexes)
     term_dims = (
         seg_salts.join(term_stats.select("term", "df", "n_salts"), "term")
         .groupBy("term", "df", "n_salts")
@@ -147,89 +142,28 @@ def merge_indexes(spark: SparkSession, indexes: list[Index], *,
              .alias("fast")))
     if broadcast_dims:
         term_dims = F.broadcast(term_dims)
-    posts = None
-    for ix in indexes:
-        part = ix.postings.drop("df", "bucket")
-        posts = part if posts is None else posts.unionByName(part)
-    posts = posts.join(term_dims, "term")
+    posts = union(ix.postings.drop("df", "bucket") for ix in indexes) \
+        .join(term_dims, "term")
 
-    n_docs, avgdl = stats.n_docs, stats.avgdl
-    spark_ = posts.sparkSession
-    n_parts = int(spark_.conf.get("spark.sql.shuffle.partitions"))
+    # ---- fast path: encoded blocks shuffle by (term, salt), then decode
+    # feeds the build's encoder inside one kernel -------------------------
+    n_parts = int(posts.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    encode = encode_partition_kernel(stats.n_docs, stats.avgdl, k1, b)
+    fast_posts = (
+        posts.where(F.col("fast") == 1)
+        .repartition(n_parts, "term", "salt")
+        .sortWithinPartitions("term", "salt")
+        .mapInPandas(lambda it: encode(_decoded(it, ("df", "salt"))),
+                     schema=POSTINGS_SCHEMA)
+        .withColumn("bucket", bucket_col(F.col("term"), n_buckets)))
 
-    # ---- fast path: encoded blocks shuffle by (term, salt) -----------------
-    fast = (posts.where(F.col("fast") == 1)
-            .repartition(n_parts, "term", "salt")
-            .sortWithinPartitions("term", "salt", "first_doc_id"))
+    # ---- re-salt path: decode to posting grain, the build's writer -------
+    slow_posts = encode_postings(
+        decode_to_posting_rows(posts.where(F.col("fast") == 0),
+                               carry=("df", "n_salts")),
+        stats, k1, b, n_buckets)
 
-    def reencode_runs(batches):
-        import numpy as np
-        import pandas as pd
-
-        cols = [f.name for f in POSTINGS_SCHEMA.fields]
-        carry: pd.DataFrame | None = None
-
-        def encode_run(g, out):
-            term = g["term"].iat[0]
-            salt = int(g["salt"].iat[0])
-            df_global = int(g["df"].iat[0])
-            idf = float(codec.bm25_idf(df_global, n_docs))
-            ids, tfs, nrm = codec.decode_blocks_concat(
-                g["first_doc_id"].to_numpy(), g["docid_gaps"],
-                g["n_in_block"].to_numpy(), g["tfs_enc"], g["norms_enc"])
-            o = np.argsort(ids, kind="stable")
-            for r in codec.encode_blocks(ids[o], tfs[o], nrm[o],
-                                         idf, avgdl, k1, b):
-                r["term"] = term
-                r["salt"] = salt
-                r["bucket"] = 0
-                r["df"] = df_global
-                out.append(r)
-
-        def flush(pdf, last_partial):
-            terms = pdf["term"].to_numpy()
-            salts = pdf["salt"].to_numpy()
-            change = np.flatnonzero((terms[1:] != terms[:-1])
-                                    | (salts[1:] != salts[:-1])) + 1
-            bounds = np.concatenate(([0], change, [len(pdf)]))
-            stop = len(bounds) - 2 if last_partial else len(bounds) - 1
-            out: list[dict] = []
-            for i in range(stop):
-                encode_run(pdf.iloc[bounds[i]:bounds[i + 1]], out)
-            rest = pdf.iloc[bounds[stop]:].copy() if last_partial else None
-            return out, rest
-
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if not len(pdf):
-                continue
-            rows, carry = flush(pdf, last_partial=True)
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-        if carry is not None and len(carry):
-            rows, _ = flush(carry, last_partial=False)
-            yield pd.DataFrame(rows, columns=cols)
-
-    fast_posts = fast.mapInPandas(reencode_runs, schema=POSTINGS_SCHEMA)
-
-    # ---- re-salt path: decode to posting grain, reuse the build kernel ----
-    slow = posts.where(F.col("fast") == 0)
-    decoded = decode_to_posting_rows(slow, carry=("df", "n_salts"))
-    slow_sorted = (decoded
-                   .withColumn("salt", F.pmod("doc_id", F.col("n_salts"))
-                               .cast("int"))
-                   .repartition(n_parts, "term", "salt")
-                   .sortWithinPartitions("term", "salt"))
-    slow_posts = slow_sorted.mapInPandas(
-        encode_partition_kernel(n_docs, avgdl, k1, b), schema=POSTINGS_SCHEMA)
-
-    postings = (
-        fast_posts.unionByName(slow_posts)
-        .withColumn("bucket",
-                    F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"))
-    )
+    postings = fast_posts.unionByName(slow_posts)
     if cache:
         postings = postings.persist()
 

@@ -9,13 +9,14 @@ matches how dl is counted, SURVEY §8.7).
 Spark formulation: positions live in the committed segment's
 positional-postings table (term, doc_id, poss array<int>, bucket) —
 store.segment_index builds it with the segment and build.write_index
-commits it beside docs/postings, bucket-partitioned parquet with bucket
-= crc32(term) % the segment's n_buckets, so the coordinator derives the
-partition-pruning predicate in pure Python (Index.pos_bucket;
-build.py POSITIONS_SCHEMA; [lucene dep] Lucene84PostingsWriter's
-position stream next to the doc/freq stream). Every field (content,
-title) is its own catalog segment. A phrase [t0, t1] is a join of the
-two terms' bucket-pruned position rows on (doc_id, pos+1) — the
+commits it beside docs/postings, bucket-partitioned parquet under the
+segment's one term→bucket rule (crc32(term) % n_buckets, shared with
+the postings), so the coordinator derives the partition-pruning
+predicate in pure Python (Index.bucket; build.py POSITIONS_SCHEMA;
+[lucene dep] Lucene84PostingsWriter's position stream next to the
+doc/freq stream). Every field (content, title) is its own catalog
+segment. A phrase [t0, t1] is a join of the two terms' bucket-pruned
+position rows on (doc_id, pos+1) — the
 ExactPhraseMatcher intersection, expressed relationally so Catalyst
 plans it. Queries NEVER re-tokenize documents (the r03 plan audit's one
 remaining scale-killer: posexplode of content at query time was a full
@@ -60,9 +61,8 @@ def _term_rows(spark: SparkSession, sf_dir: str, term: str,
                field: str) -> DataFrame:
     """One term's (term, doc)-grain position rows — bucket partition-
     pruned scan (one bucket dir) + term predicate pushdown."""
-    idx = store.segment_index(spark, sf_dir, field)
-    return idx.positions.where((F.col("bucket") == idx.pos_bucket(term))
-                               & (F.col("term") == term))
+    return store.segment_index(spark, sf_dir, field).term_rows(
+        "positions", [term])
 
 
 def term_positions(spark: SparkSession, sf_dir: str, term: str,
@@ -109,29 +109,20 @@ def _pair_count(p0, p1, slop: int) -> int:
 
 def _pair_rows_pandas(spark: SparkSession, sf_dir: str, t0: str, t1: str):
     """Coordinator pyarrow read of the two phrase legs' pruned position
-    bucket dirs of the committed content segment — ZERO Spark jobs (the
-    phrase sibling of exec._local_blocks_pandas). Returns False when the
-    pair is hot (caller uses the distributed join), else a pandas frame
-    of (term, doc_id, poss) rows."""
-    import glob
-    import os
-
+    bucket dirs of the committed content segment (Index.term_scanner) —
+    ZERO Spark jobs (the phrase sibling of exec._local_blocks_pandas).
+    Returns False when the pair is hot (caller uses the distributed
+    join), else a pandas frame of (term, doc_id, poss) rows."""
     import pandas as pd
-    import pyarrow.dataset as ds
 
-    idx = store.segment_index(spark, sf_dir)
-    files = sorted(
-        f for b in sorted({idx.pos_bucket(t) for t in (t0, t1)})
-        for f in glob.glob(os.path.join(idx.disk_path, "positions",
-                                        f"bucket={b}", "*.parquet")))
-    if not files:
-        return pd.DataFrame(columns=["term", "doc_id", "poss"])
-    dataset = ds.dataset(files, format="parquet")
-    flt = ds.field("term").isin([t0, t1])
-    if dataset.count_rows(filter=flt) > LOCAL_MAX_PAIR_ROWS:
+    cols = ["term", "doc_id", "poss"]
+    scanner = store.segment_index(spark, sf_dir).term_scanner(
+        "positions", (t0, t1), cols)
+    if scanner is None:
+        return pd.DataFrame(columns=cols)
+    if scanner.count_rows() > LOCAL_MAX_PAIR_ROWS:
         return False
-    return dataset.to_table(columns=["term", "doc_id", "poss"],
-                            filter=flt).to_pandas()
+    return scanner.to_table().to_pandas()
 
 
 def _phrase_pair_join(spark: SparkSession, sf_dir: str,

@@ -40,9 +40,10 @@ Spark formulation:
   * compact() is SegmentMerger dropping deletes: posting blocks DECODE
     to posting grain (merge.decode_to_posting_rows — no re-tokenize),
     deleted postings are filtered, df/cf/N/avgdl recompute from the
-    survivors, and the SAME build encode kernel re-frames the blocks —
-    so compact(view) is BYTE-IDENTICAL to building the live corpus from
-    scratch at the preserved doc_ids (pytest-pinned).
+    survivors, and the build's postings writer (build.encode_postings)
+    re-frames the blocks — so compact(view) is BYTE-IDENTICAL to
+    building the live corpus from scratch at the preserved doc_ids
+    (pytest-pinned).
 """
 
 from __future__ import annotations
@@ -52,7 +53,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import build, merge, store
-from .build import DEFAULT_N_SALTS, DEFAULT_SALT_THRESHOLD, Index, POSTINGS_SCHEMA, Stats
+from .build import Index, Stats
 from .registry import Entry
 
 REGISTRY: dict[str, Entry] = {}
@@ -116,11 +117,10 @@ def update_doc(view: IndexView, doc_id: int, new_content: str) -> IndexView:
                 "repo", "path", "commit", "lang",
                 F.lit(new_content).alias("content")))
     with_positions = idx.positions is not None
+    # the merge salts with the base's meta; the delta's own salting only
+    # routes its terms to merge's fast or re-salt path
     delta = build.build_index(
-        spark, delta_corpus,
-        n_buckets=idx.n_buckets,
-        salt_threshold=idx.meta.get("salt_threshold", DEFAULT_SALT_THRESHOLD),
-        n_salts=idx.meta.get("n_salts", DEFAULT_N_SALTS),
+        spark, delta_corpus, n_buckets=idx.n_buckets,
         k1=idx.k1, b=idx.b, cache=False, with_positions=with_positions)
     merged = merge.merge_indexes(spark, [idx, delta])
     if with_positions:
@@ -165,13 +165,10 @@ def compact(view: IndexView, *, cache: bool = True) -> Index:
     docs): rewrite the physical segment WITHOUT the deleted docs and
     with stats recomputed from the survivors — no re-tokenization.
     Blocks decode to posting grain, deleted postings filter out, df/cf
-    re-aggregate, and the build encode kernel re-frames the blocks, so
+    re-aggregate, and the build's postings writer re-frames the blocks, so
     the output is byte-identical to a from-scratch build of the live
     corpus at the preserved doc_ids (tested)."""
     idx, deletes = view.index, view.deletes
-    spark = idx.postings.sparkSession
-    salt_threshold = idx.meta.get("salt_threshold", DEFAULT_SALT_THRESHOLD)
-    n_salts_cfg = idx.meta.get("n_salts", DEFAULT_N_SALTS)
 
     docs = _drop_deleted(idx.docs, deletes)
     if cache:
@@ -185,40 +182,22 @@ def compact(view: IndexView, *, cache: bool = True) -> Index:
     # decode -> drop deleted postings -> recompute term stats (survivors
     # only: a term whose last doc died leaves the dictionary, exactly as
     # a rebuild would). ONE posting-grain shuffle (the term groupBy),
-    # then the same (term, salt) encode exchange as the build.
+    # then the build's (term, salt) encode exchange.
     live = _drop_deleted(
         merge.decode_to_posting_rows(idx.postings), deletes)
     if cache:
         from pyspark import StorageLevel
 
         live = live.persist(StorageLevel.DISK_ONLY)
-    term_stats = (
-        live.groupBy("term")
-        .agg(F.count("*").alias("df"), F.sum("tf").alias("cf"))
-        .withColumn(
-            "n_salts",
-            F.when(F.col("df") > salt_threshold, F.lit(n_salts_cfg))
-            .otherwise(F.lit(1))))
+    term_stats = build.with_n_salts(
+        live.groupBy("term").agg(F.count("*").alias("df"), F.sum("tf").alias("cf")),
+        idx.meta)
     if cache:
         term_stats = term_stats.persist()
 
-    dims = F.broadcast(term_stats.select("term", "df", "n_salts"))
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    enriched = (
-        live.join(dims, "term")
-        .withColumn("salt", F.pmod("doc_id", F.col("n_salts")).cast("int"))
-        .select("doc_id", "term", F.col("tf").cast("int").alias("tf"),
-                "df", "dl_byte", "salt"))
-    sorted_parts = (enriched.repartition(n_parts, "term", "salt")
-                    .sortWithinPartitions("term", "salt"))
-    postings = (
-        sorted_parts.mapInPandas(
-            build.encode_partition_kernel(
-                stats.n_docs, stats.avgdl, idx.k1, idx.b),
-            schema=POSTINGS_SCHEMA)
-        .withColumn("bucket",
-                    F.pmod(F.xxhash64("term"),
-                           F.lit(idx.n_buckets)).cast("int")))
+    postings = build.encode_postings(
+        live.join(F.broadcast(term_stats.select("term", "df", "n_salts")), "term"),
+        stats, idx.k1, idx.b, idx.n_buckets)
     if cache:
         postings = postings.persist()
 

@@ -25,18 +25,29 @@ def _postings_key(df):
         for r in df.collect())
 
 
+#: the threshold sits between the halves' df (~180-215) and the merged
+#: df (~375-415) of the corpus's hot terms: a term salted in both halves
+#: keeps its n_salts (fast path), the rest are salted only once merged
+#: (re-salt path)
+_SPLIT_KW = dict(n_buckets=8, salt_threshold=200, n_salts=4)
+
+
 @pytest.fixture(scope="module")
-def split_build(spark):
-    from pysearch import build, merge
+def split_inputs(spark):
+    """The corpus built as two segments, even and odd doc_ids."""
+    from pysearch import build
 
     corpus = _full_corpus(spark)
-    a = corpus.where(F.col("doc_id") % 2 == 0)
-    b = corpus.where(F.col("doc_id") % 2 == 1)
-    kw = dict(n_buckets=8, salt_threshold=50, n_salts=4)
-    ia = build.build_index(spark, a, **kw)
-    ib = build.build_index(spark, b, **kw)
-    merged = merge.merge_indexes(spark, [ia, ib])
-    full = build.build_index(spark, corpus, **kw)
+    return [build.build_index(spark, corpus.where(F.col("doc_id") % 2 == p),
+                              **_SPLIT_KW) for p in (0, 1)]
+
+
+@pytest.fixture(scope="module")
+def split_build(spark, split_inputs):
+    from pysearch import build, merge
+
+    merged = merge.merge_indexes(spark, split_inputs)
+    full = build.build_index(spark, _full_corpus(spark), **_SPLIT_KW)
     return merged, full
 
 
@@ -79,14 +90,21 @@ def test_merge_plan_has_no_per_term_group(split_build):
     assert "MapInPandas" in plan
 
 
-def test_merge_exercises_both_paths(spark, split_build):
+def test_merge_exercises_both_paths(split_inputs, split_build):
     """The odd/even split drops per-segment df below the salt threshold
     for some merged-salted terms (re-salt path) while leaving unsalted
     terms salt-stable (fast path) — both kernels must contribute."""
-    merged, full = split_build
-    n_salted = (full.term_stats.where(F.col("n_salts") > 1).count())
-    assert n_salted > 0  # re-salt path exercised by at least these terms
-    assert merged.postings.where(F.col("salt") > 0).count() > 0
+    merged, _ = split_build
+    old = [dict(ix.term_stats.select("term", "n_salts").collect())
+           for ix in split_inputs]
+    new = dict(merged.term_stats.select("term", "n_salts").collect())
+    fast = {t for t, n in new.items() if all(o.get(t) == n for o in old)}
+    resalt = {t for t, n in new.items()
+              if any(t in o and o[t] != n for o in old)}
+    written = {r["term"] for r in
+               merged.postings.select("term").distinct().collect()}
+    assert fast & written, "no term kept its n_salts in every input"
+    assert resalt & written, "no term changed its n_salts"
 
 
 def test_merge_adaptive_broadcast_by_vocab(spark):

@@ -21,12 +21,10 @@ def _pair_rows_spark(spark, t0, t1):
     """Spark read of both phrase legs' (term, doc_id, poss) rows: the
     content segment's positions table under the bucket and term filter
     phrase._pair_rows_pandas applies to its files."""
-    from pysearch import phrase, store
+    from pysearch import store
 
-    idx = store.segment_index(spark, SF_SMOKE)
-    buckets = sorted({idx.pos_bucket(t) for t in (t0, t1)})
-    return (phrase.positions_table(spark, SF_SMOKE)
-            .where(F.col("bucket").isin(buckets) & F.col("term").isin(t0, t1))
+    return (store.segment_index(spark, SF_SMOKE)
+            .term_rows("positions", (t0, t1))
             .select("term", "doc_id", "poss"))
 
 
@@ -90,21 +88,45 @@ def test_positions_store_matches_posexplode(spark):
     assert got == want
 
 
-def test_bucket_of_matches_spark_crc32(spark):
-    """Driver-side pos_bucket_of must equal the Spark column for every
-    vocab term (the partition-pruning predicate depends on it)."""
-    from pysearch import build
+def _assert_one_bucket_rule(idx):
+    """Every postings and positions row of idx sits in the bucket
+    Index.bucket names for its term."""
+    for table in ("postings", "positions"):
+        df = getattr(idx, table)
+        if df is None:
+            continue
+        rows = df.select("term", "bucket").distinct().collect()
+        assert rows, table
+        wrong = [tuple(r) for r in rows if r["bucket"] != idx.bucket(r["term"])]
+        assert not wrong, (table, wrong[:5])
 
-    terms = [r["term"] for r in
-             spark.createDataFrame([("mergeSort camelCase http2 value",)],
-                                   "text string")
-             .select(F.explode(F.split("text", " ")).alias("term"))
-             .collect()]
-    df = spark.createDataFrame([(t,) for t in terms], "term string")
-    rows = df.select(
-        "term", build.pos_bucket_col(F.col("term"), 16).alias("b")).collect()
+
+def test_bucket_of_matches_spark_crc32(spark):
+    """The driver's Index.bucket equals the Spark column build.bucket_col
+    for literal terms (the partition-pruning predicate depends on it),
+    and every postings and positions row of a built (committed), a
+    merged and a compacted segment sits in the bucket Index.bucket
+    names: one term→bucket rule for both tables and every writer."""
+    from pysearch import build, merge, store, versioning
+
+    seg = store.segment_index(spark, SF_SMOKE)
+    terms = ["mergeSort", "camelCase", "http2", "value", "naïve", "日本語"]
+    rows = (spark.createDataFrame([(t,) for t in terms], "term string")
+            .select("term", build.bucket_col(F.col("term"), seg.n_buckets)
+                    .alias("b")).collect())
     for r in rows:
-        assert build.pos_bucket_of(r["term"], 16) == r["b"], r["term"]
+        assert seg.bucket(r["term"]) == r["b"], r["term"]
+    _assert_one_bucket_rule(seg)
+
+    corpus = build.corpus_from_documents(spark, SF_SMOKE)
+    # salt_threshold=200: the merge takes both its fast and re-salt paths
+    kw = dict(n_buckets=8, salt_threshold=200, n_salts=4, cache=False)
+    halves = [build.build_index(spark, corpus.where(F.col("doc_id") % 2 == p),
+                                **kw) for p in (0, 1)]
+    _assert_one_bucket_rule(merge.merge_indexes(spark, halves, cache=False))
+
+    view = versioning.delete_doc(versioning.open_view(seg), 3)
+    _assert_one_bucket_rule(versioning.compact(view, cache=False))
 
 
 def test_build_with_positions_roundtrip(spark):

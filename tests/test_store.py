@@ -4,10 +4,13 @@ revalidated against the live SparkSession."""
 
 import json
 import os
+import shutil
 import subprocess
 import sys
 
-from pysearch import store
+import pytest
+
+from pysearch import build, store
 
 SF = "/root/testdata/sf0.001"
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -78,3 +81,20 @@ def test_restart_session_same_answers():
     assert before["q_phrase"] and before["search_interactive"]
     for key in before:
         assert after[key] == before[key], key
+
+
+def test_load_index_refuses_segment_without_bucket_rule(spark, tmp_path):
+    """A committed segment whose manifest.json records no term→bucket
+    rule (one written before the rule was recorded) is refused instead
+    of being read through the wrong bucket dirs."""
+    seg = str(tmp_path / "segment")
+    shutil.copytree(store.segment_index(spark, SF).disk_path, seg)
+    assert build.load_index(spark, seg).n_buckets > 0
+    path = os.path.join(seg, "manifest.json")
+    with open(path) as f:
+        manifest = json.load(f)
+    del manifest["bucket_rule"]
+    with open(path, "w") as f:
+        json.dump(manifest, f)
+    with pytest.raises(ValueError, match="bucket rule"):
+        build.load_index(spark, seg)

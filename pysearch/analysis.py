@@ -15,9 +15,9 @@ Reference anchors (SURVEY.md §2.2):
 
 DESIGN CONSTRAINT: the exact same token stream must be producible by
   (1) pure Python        (oracle + unit tests)          -> analyze()
-  (2) pandas (vectorized, for the pandas-UDF path)      -> analyze_series()
-  (3) Spark native SQL expressions (JVM codegen path)   -> tokens_expr()
-  (4) DuckDB SQL (driver correctness oracle)            -> duckdb_tokens_expr()
+  (2) Spark native SQL expressions (the build path: JVM
+      codegen, no Python worker)                        -> tokens_expr()
+  (3) DuckDB SQL (driver correctness oracle)            -> duckdb_tokens_expr()
 so the spec uses ONLY RE2-compatible regexes (no lookahead/lookbehind —
 DuckDB is RE2) with two-capture-group split rules, and an ASCII token
 alphabet [a-z0-9] (non-ASCII bytes are token breaks; the corpus is source
@@ -83,27 +83,11 @@ def analyze(text: str) -> list[str]:
     return [t for t in toks if t not in STOPWORD_SET]
 
 
-def analyze_series(texts):
-    """Vectorized pandas implementation (Series[str] -> Series[list[str]]).
-
-    This is the body of the scalar pandas UDF used on the build path when
-    ``tokenizer='pandas'`` — all work in pandas.str vectorized ops.
-    """
-    import pandas as pd  # local import: keep module importable w/o pandas
-
-    s = texts.fillna("")
-    for pat in SPLIT_RULES:
-        s = s.str.replace(pat, r"\1 \2", regex=True)
-    toks = s.str.lower().str.findall(TOKEN_RE)
-    stop = STOPWORD_SET
-    return toks.map(lambda ts: [t for t in ts if t not in stop])
-
-
 def tokens_expr(col):
     """Spark-native (JVM/codegen) expression: string col -> array<string>.
 
     Equivalent to analyze(); stays entirely inside Catalyst/Tungsten —
-    this is the fast default on the build path (no Python worker at all).
+    this is the build path's tokenizer (no Python worker at all).
     Java regex replacement syntax uses $1/$2.
     """
     from pyspark.sql import functions as F
@@ -113,18 +97,6 @@ def tokens_expr(col):
         c = F.regexp_replace(c, pat, r"$1 $2")
     arr = F.regexp_extract_all(F.lower(c), F.lit(TOKEN_RE), 0)
     return F.filter(arr, lambda x: ~x.isin(*STOPWORDS))
-
-
-def pandas_tokens_udf():
-    """Scalar pandas UDF (Arrow-batched) wrapping analyze_series()."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def _tokenize(texts):
-        return analyze_series(texts)
-
-    return _tokenize
 
 
 def duckdb_tokens_expr(text_col: str) -> str:

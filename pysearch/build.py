@@ -2,7 +2,7 @@
 
 Models the reference's bulk-index path (SURVEY §3.2) Spark-first:
 
-  corpus ──tokenize (JVM regex codegen OR Arrow pandas UDF)──▶ tokens
+  corpus ──tokenize (JVM regex codegen, analysis.tokens_expr)──▶ tokens
     ├──▶ docs/norms   (forward index: dl, SmallFloat dl_byte, content_sha)
     ├──▶ tf           groupBy(doc_id, term)  [map-side partial agg]
     ├──▶ term_stats   groupBy(term): df, cf  +  n_salts for hot terms
@@ -238,17 +238,6 @@ def with_doc_ids(corpus: DataFrame, n_parts: int | None = None) -> DataFrame:
     return out
 
 
-def tokenize(corpus: DataFrame, tokenizer: str = "native") -> DataFrame:
-    """corpus -> (doc_id, tokens array<string>). Both paths vectorized."""
-    if tokenizer == "native":
-        toks = analysis.tokens_expr(F.col("content"))
-    elif tokenizer == "pandas":
-        toks = analysis.pandas_tokens_udf()(F.col("content"))
-    else:
-        raise ValueError(tokenizer)
-    return corpus.select("doc_id", toks.alias("tokens"))
-
-
 def encode_partition_kernel(n_docs: int, avgdl: float, k1: float, b: float):
     """mapInPandas kernel: posting-grain rows (doc_id, tf, dl_byte,
     term, salt, df), sorted by (term, salt) within the partition, ->
@@ -353,7 +342,6 @@ def build_index(
     n_buckets: int = DEFAULT_BUCKETS,
     salt_threshold: int = DEFAULT_SALT_THRESHOLD,
     n_salts: int = DEFAULT_N_SALTS,
-    tokenizer: str = "native",
     k1: float = analysis.K1,
     b: float = analysis.B,
     cache: bool = True,
@@ -361,12 +349,7 @@ def build_index(
     with_positions: bool = False,
 ) -> Index:
     """Build all index tables from a corpus DataFrame (not yet written out)."""
-    if tokenizer == "native":
-        toks_col = analysis.tokens_expr(F.col("content"))
-    elif tokenizer == "pandas":
-        toks_col = analysis.pandas_tokens_udf()(F.col("content"))
-    else:
-        raise ValueError(tokenizer)
+    toks_col = analysis.tokens_expr(F.col("content"))
 
     # ---- forward index + norms (dl counts post-stopword tokens, SURVEY §8.7)
     # Computed per-partition with NO shuffle: tokens are derived in place
@@ -412,8 +395,7 @@ def build_index(
         tf = tf.persist(StorageLevel.DISK_ONLY)
 
     # ---- per-term global stats + salting decision
-    meta = {"tokenizer": tokenizer, "salt_threshold": salt_threshold,
-            "n_salts": n_salts}
+    meta = {"salt_threshold": salt_threshold, "n_salts": n_salts}
     term_stats = with_n_salts(
         tf.groupBy("term").agg(F.count("*").alias("df"), F.sum("tf").alias("cf")),
         meta)
@@ -468,9 +450,15 @@ def write_index(index: Index, out_dir: str, resume: bool = True) -> dict:
     a table directory with _SUCCESS is skipped on re-run (translog analog:
     InternalEngine#recoverFromTranslog ≙ skip-if-committed, SURVEY §1.1).
 
+    Resuming over a committed segment of another bucket rule raises
+    ValueError (its skipped tables would be relabelled by the new
+    manifest); resume=False overwrites it.
+
     Returns the manifest dict (also written to <out_dir>/manifest.json),
     including per-bucket lineage metrics (north_rule requirement).
     """
+    if resume and os.path.exists(os.path.join(out_dir, "manifest.json")):
+        _manifest(out_dir)
     os.makedirs(out_dir, exist_ok=True)
     t0 = time.time()
     wrote = []
@@ -524,16 +512,23 @@ def write_index(index: Index, out_dir: str, resume: bool = True) -> dict:
     return manifest
 
 
-def load_index(spark: SparkSession, out_dir: str) -> Index:
-    """Reopen a committed segment. A segment whose manifest records no
-    or another bucket rule is refused: its term lookups would prune to
-    the wrong bucket dirs and silently miss every hit."""
+def _manifest(out_dir: str) -> dict:
+    """<out_dir>/manifest.json. A segment whose manifest records no or
+    another bucket rule is refused: its term lookups would prune to the
+    wrong bucket dirs and silently miss every hit."""
     with open(os.path.join(out_dir, "manifest.json")) as f:
         m = json.load(f)
     if m.get("bucket_rule") != BUCKET_RULE:
         raise ValueError(
             f"segment {out_dir} was written with bucket rule "
             f"{m.get('bucket_rule')!r}, not {BUCKET_RULE!r}: rebuild it")
+    return m
+
+
+def load_index(spark: SparkSession, out_dir: str) -> Index:
+    """Reopen a committed segment (refused unless its manifest records
+    BUCKET_RULE)."""
+    m = _manifest(out_dir)
     pos_path = os.path.join(out_dir, "positions")
     return Index(
         docs=spark.read.parquet(os.path.join(out_dir, "docs")),

@@ -8,7 +8,7 @@ Models the reference's query-then-fetch lifecycle (SURVEY §3.1):
 One driver-side block read (_local_blocks_pandas): a pyarrow read of the
 pruned bucket dirs of a committed segment (Index.term_scanner — no Spark
 job) or one narrow collect of the same bucket+term-pruned scan
-(Index.term_rows) for an in-memory segment. Three physical strategies,
+(Index.term_rows) for an in-memory segment. Two physical strategies,
 auto-selected by the Σdf estimate over the query terms (search_many):
 
   * 'local' (Σdf <= LOCAL_MAX_POSTINGS) — the driver-side block read,
@@ -24,16 +24,12 @@ auto-selected by the Σdf estimate over the query terms (search_many):
     interactive single-query path (search_interactive) is this strategy
     returning pandas.
 
-  * 'gather' (Σdf <= GATHER_MAX_POSTINGS) — the same kernel on the
-    executors: all posting blocks of a query go to ONE task per query
-    (ES's scatter-gather; off the driver but still single-task).
-
   * 'distributed' — the one executor BM25 kernel (_scored_postings)
     decodes and scores posting rows per partition with mapInPandas
-    (narrow, no gather); _match_scores sums them per (query, doc) and
-    applies the AND rule; a window ranks each query's top-k. Scales to
-    arbitrarily hot terms; the shuffle carries one row per (candidate
-    doc, term). ES analog: per-shard query phase +
+    (narrow, no per-query task); _match_scores sums them per (query,
+    doc) and applies the AND rule; a window ranks each query's top-k.
+    Scales to arbitrarily hot terms; the shuffle carries one row per
+    (candidate doc, term). ES analog: per-shard query phase +
     SearchPhaseController#reducedQueryPhase.
 
 The compound scorers (bool, dis_max, multi_match, function_score, ...)
@@ -60,10 +56,6 @@ HIT_SCHEMA = T.StructType([
     T.StructField("score", T.DoubleType(), False),
 ])
 
-# Between the driver-local cap and this, blocks shuffle to ONE task per query
-# (executor-side MAXSCORE — off the driver but still single-task); above it,
-# fully distributed decode+score. 20M postings ≈ 160k block rows per task.
-GATHER_MAX_POSTINGS = 20_000_000
 TERM_DICT_CACHE_MAX = 200_000    # full term-dict driver cache below this vocab size
 
 # posting-block columns the scoring and counting kernels read
@@ -118,7 +110,9 @@ def _score_query_group(pdf, q: Query, n_docs: int, avgdl: float, k1: float,
                        b: float):
     """All posting blocks of query `q` (BLOCK_COLS + its per-term `weight`)
     -> its top-k (query_id, doc_id, score), ordered (score desc, doc_id
-    asc). Implements MAXSCORE with block skipping (see module docstring)."""
+    asc). Implements MAXSCORE with block skipping (see module docstring).
+    For mode=and, every distinct query term must have blocks in `pdf`
+    (_score_blocks_pd applies that rule)."""
     import pandas as pd
 
     k, mode = q.k, q.mode
@@ -302,7 +296,7 @@ def _candidates(index: Index, queries: list[Query]) -> DataFrame:
 # MAXSCOREd in well under a second, and beats the distributed path's
 # multi-job floor by ~7× (r03 measurement at 600k postings: 0.85 s local
 # vs 6.4 s distributed on local[8]). Truly hot terms at 10^12-doc scale
-# (billions of postings) still route to gather/distributed via the estimate.
+# (billions of postings) still route to distributed via the estimate.
 LOCAL_MAX_POSTINGS = 2_000_000
 
 
@@ -315,35 +309,23 @@ def search_many(index: Index, queries: list[Query], method: str = "auto") -> Dat
                      scored by MAXSCORE in process: no Spark job on a
                      committed segment once the dictionary is warm, one
                      narrow scan job on an in-memory one.
-      gather       — ONE Spark job: blocks shuffle to one task per query;
-                     the same MAXSCORE kernel.
       distributed  — decode+score per partition, shuffle (doc,query) grain,
                      window top-k. For hot terms / huge candidate sets.
+    "gather" names a deleted one-task-per-query strategy (slower than
+    distributed on the measured hot batches, BENCH/PLANS.md); it is kept
+    as another name for distributed. Any other method raises ValueError.
     """
+    if method not in ("auto", "local", "distributed", "gather"):
+        raise ValueError(f"unknown search method {method!r}")
     queries = [q for q in queries if q.terms]
     if not queries:
         return index.postings.sparkSession.createDataFrame([], HIT_SCHEMA)
 
     if method == "auto":
         est = _estimate_postings(index, queries)
-        method = ("local" if est <= LOCAL_MAX_POSTINGS
-                  else "gather" if est <= GATHER_MAX_POSTINGS
-                  else "distributed")
-
+        method = "local" if est <= LOCAL_MAX_POSTINGS else "distributed"
     if method == "local":
         return _search_local(index, queries)
-
-    if method == "gather":
-        by_id = {q.query_id: q for q in queries}
-        bm25 = _bm25_params(index)
-
-        def kernel(pdf):
-            return _score_query_group(
-                pdf, by_id[int(pdf["query_id"].iloc[0])], *bm25)
-
-        return (_candidates(index, queries).groupBy("query_id")
-                .applyInPandas(kernel, schema=HIT_SCHEMA))
-
     return _search_distributed(index, queries)
 
 
@@ -381,7 +363,8 @@ def _score_blocks_pd(index: Index, blocks, queries: list[Query]):
     for q in sorted(queries, key=lambda q: q.query_id):
         mult = {t: float(m) for t, m in Counter(q.terms).items()}
         g = blocks[blocks["term"].isin(mult)]
-        if len(g):
+        # the AND rule of _match_scores: a term without blocks matches no doc
+        if g["term"].nunique() >= (len(mult) if q.mode == "and" else 1):
             outs.append(_score_query_group(
                 g.assign(weight=g["term"].map(mult)), q, *bm25))
     if not outs:
@@ -395,9 +378,9 @@ def _search_local(index: Index, queries: list[Query]) -> DataFrame:
     """Local strategy: the driver-side block read + in-process MAXSCORE
     -> a small local DataFrame of top-k rows.
 
-    The query relation is NOT joined in (unlike the gather/distributed
-    paths): the blocks land on the driver anyway, so per-query tagging is
-    a pandas map here — skipping the broadcast-build job halves
+    The query relation is NOT joined in (unlike the distributed path):
+    the blocks land on the driver anyway, so per-query tagging is a
+    pandas map here — skipping the broadcast-build job halves
     selective-query latency (r03 measurement: ~0.4 s at sf0.1)."""
     terms = sorted({t for q in queries for t in q.terms})
     hits = _score_blocks_pd(index, _local_blocks_pandas(index, terms), queries)

@@ -10,6 +10,10 @@ def spark():
     from pysearch.session import get_spark
 
     os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
+    # the suite's corpora are a few hundred docs; at the 16g default the
+    # JVM's heap grows past what a 16 GB host holds next to the second JVM
+    # of test_store's restart test (the kernel OOM killer ended one run)
+    os.environ.setdefault("PYSEARCH_DRIVER_MEM", "4g")
     s = get_spark(cores=4, app="pysearch-tests", shuffle_partitions=8)
     yield s
     s.stop()

@@ -1,7 +1,7 @@
 """Analyzer golden cases + 3-way implementation parity (FIXTURES §4).
 
-The spec promises the SAME tokens from pure Python, pandas-vectorized,
-Spark-native SQL (tested in test_spark_build.py), and DuckDB RE2 SQL.
+The spec promises the SAME tokens from pure Python, Spark-native SQL
+(tested in test_spark_e2e.py), and DuckDB RE2 SQL.
 """
 
 import string
@@ -62,13 +62,6 @@ def _random_texts(n=300, seed=42):
                 parts.append("".join(rng.choice(alphabet, size=ln)))
         out.append(" ".join(parts))
     return out
-
-
-def test_pandas_parity_random():
-    texts = _random_texts()
-    got = analysis.analyze_series(pd.Series(texts)).tolist()
-    expect = [analysis.analyze(t) for t in texts]
-    assert got == expect
 
 
 def test_duckdb_parity_random():

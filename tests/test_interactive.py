@@ -4,8 +4,8 @@ Spark path and zero Spark jobs once the terms dictionary is warm."""
 
 import pytest
 
+from pysearch import analysis, store
 from pysearch import exec as pexec
-from pysearch import store
 
 SF = "/root/testdata/sf0.001"
 
@@ -23,6 +23,7 @@ CASES = [
     ("value merge sort", "or", 10),
     ("merge sort", "and", 10),
     ("value table part hash", "and", 10),
+    ("merge zzqqabsent", "and", 10),   # AND with an absent term -> empty
     ("zzqqabsent", "or", 10),          # absent term -> empty
     ("the a to", "or", 10),            # stopword-only -> empty
     ("value merge", "or", 100),        # deep k
@@ -41,8 +42,11 @@ def _inter_rows(idx, text, mode, k):
 
 
 @pytest.mark.parametrize("text,mode,k", CASES)
-def test_interactive_rank_identical(spark, seg, text, mode, k):
-    assert _inter_rows(seg, text, mode, k) == _spark_rows(seg, text, mode, k)
+def test_interactive_rank_identical(spark, seg, oracle_index, text, mode, k):
+    rows = _inter_rows(seg, text, mode, k)
+    assert rows == _spark_rows(seg, text, mode, k)
+    assert [d for d, _ in rows] == [d for d, _ in oracle_index.search(
+        analysis.analyze(text), k=k, mode=mode)]
 
 
 def test_interactive_runs_zero_spark_jobs(spark, seg):

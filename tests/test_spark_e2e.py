@@ -1,7 +1,7 @@
 """End-to-end: Spark-built index answers rank-identical BM25 top-k vs the
-brute-force oracle (SURVEY §5.3), on the sf0.001 documents corpus, for all
-three physical strategies (local and gather MAXSCORE, distributed), with
-salting on."""
+brute-force oracle (SURVEY §5.3), on the sf0.001 documents corpus, for both
+physical strategies (local MAXSCORE, distributed) and the "gather" name
+that selects distributed, with salting on."""
 
 import numpy as np
 import pytest
@@ -23,6 +23,7 @@ CASES = [
     ("value merge", 100, "or"),
     ("slow fast", 25, "and"),
     ("key value", 100, "and"),
+    ("merge zzqqabsent", 10, "and"),  # AND with an absent term -> empty
 ]
 
 
@@ -47,17 +48,21 @@ def test_topk_rank_and_score_identical(built_index, oracle_index, text, k, mode,
     _assert_oracle_identical(got, _oracle_topk(oracle_index, text, k, mode))
 
 
-def test_auto_past_both_caps_matches_oracle(built_index, oracle_index, monkeypatch):
-    """With both caps at 0, method="auto" routes every query with a present
-    term to the distributed strategy (an all-absent query, Σdf = 0, stays
-    local) and still answers like the oracle."""
+def test_auto_past_local_cap_matches_oracle(built_index, oracle_index, monkeypatch):
+    """With the local cap at 0, method="auto" routes every query with a
+    present term to the distributed strategy (an all-absent query, Σdf = 0,
+    stays local) and still answers like the oracle."""
     monkeypatch.setattr(pexec, "LOCAL_MAX_POSTINGS", 0)
-    monkeypatch.setattr(pexec, "GATHER_MAX_POSTINGS", 0)
     for text, k, mode in [("merge", 10, "or"), ("zzzznotfound", 10, "or"),
                           ("value table part hash", 10, "and"),
                           ("value merge", 100, "or")]:
         got = pexec.search(built_index, text, k=k, mode=mode).collect()
         _assert_oracle_identical(got, _oracle_topk(oracle_index, text, k, mode))
+
+
+def test_unknown_method_raises(built_index):
+    with pytest.raises(ValueError, match="bogus"):
+        pexec.search_many(built_index, [pexec.Query(0, ["merge"])], method="bogus")
 
 
 @pytest.mark.parametrize("text,mode", [("merge sort", "or"), ("merge sort", "and"),
@@ -99,14 +104,14 @@ def test_fetch_sha_invariant(built_index):
 
 
 def test_tokenizer_native_vs_pandas_parity(spark):
+    """The build's tokenizer (analysis.tokens_expr, JVM codegen) equals the
+    pure-python spec."""
     corpus = build.corpus_from_documents(spark, "/root/testdata/sf0.001").limit(120)
-    a = build.tokenize(corpus, "native").orderBy("doc_id").collect()
-    b = build.tokenize(corpus, "pandas").orderBy("doc_id").collect()
-    assert [r["tokens"] for r in a] == [r["tokens"] for r in b]
-    # and both equal the pure-python spec
-    texts = {r["doc_id"]: r["content"] for r in corpus.collect()}
-    for r in a:
-        assert r["tokens"] == analysis.analyze(texts[r["doc_id"]])
+    rows = corpus.select("doc_id", "content", analysis.tokens_expr(
+        F.col("content")).alias("tokens")).collect()
+    assert rows
+    for r in rows:
+        assert r["tokens"] == analysis.analyze(r["content"])
 
 
 def test_spark_byte4_sql_parity(spark):

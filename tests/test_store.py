@@ -11,6 +11,7 @@ import sys
 import pytest
 
 from pysearch import build, store
+from pysearch import exec as pexec
 
 SF = "/root/testdata/sf0.001"
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -83,6 +84,15 @@ def test_restart_session_same_answers():
         assert after[key] == before[key], key
 
 
+def _strip_bucket_rule(seg: str) -> None:
+    path = os.path.join(seg, "manifest.json")
+    with open(path) as f:
+        manifest = json.load(f)
+    del manifest["bucket_rule"]
+    with open(path, "w") as f:
+        json.dump(manifest, f)
+
+
 def test_load_index_refuses_segment_without_bucket_rule(spark, tmp_path):
     """A committed segment whose manifest.json records no term→bucket
     rule (one written before the rule was recorded) is refused instead
@@ -90,11 +100,26 @@ def test_load_index_refuses_segment_without_bucket_rule(spark, tmp_path):
     seg = str(tmp_path / "segment")
     shutil.copytree(store.segment_index(spark, SF).disk_path, seg)
     assert build.load_index(spark, seg).n_buckets > 0
-    path = os.path.join(seg, "manifest.json")
-    with open(path) as f:
-        manifest = json.load(f)
-    del manifest["bucket_rule"]
-    with open(path, "w") as f:
-        json.dump(manifest, f)
+    _strip_bucket_rule(seg)
     with pytest.raises(ValueError, match="bucket rule"):
         build.load_index(spark, seg)
+
+
+def test_resume_refuses_segment_without_bucket_rule(spark, tmp_path):
+    """A resumed write over a committed segment whose manifest records no
+    bucket rule raises instead of skipping its tables under a new
+    manifest; resume=False rewrites it into a segment load_index opens."""
+    src = store.segment_index(spark, SF)
+    seg = str(tmp_path / "segment")
+    build.write_index(src, seg)
+    _strip_bucket_rule(seg)
+    with pytest.raises(ValueError, match="bucket rule"):
+        build.write_index(src, seg)
+    with pytest.raises(ValueError, match="bucket rule"):
+        build.load_index(spark, seg)
+    assert build.write_index(src, seg, resume=False)["tables_written"] == [
+        "docs", "postings", "term_stats", "positions"]
+    idx = build.load_index(spark, seg)
+    for text, mode in [("merge sort", "or"), ("value table part hash", "and")]:
+        assert pexec.search_interactive(idx, text, mode=mode).equals(
+            pexec.search_interactive(src, text, mode=mode))

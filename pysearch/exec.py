@@ -35,7 +35,8 @@ auto-selected by the Σdf estimate over the query terms (search_many):
 The compound scorers (bool, dis_max, multi_match, function_score, ...)
 sit on the same executor kernel (_per_term_scored, _match_scores);
 counting and the multi-term rewrites on one docID-only kernel
-(_decoded_ids).
+(_decoded_ids). Every relation built from driver-side rows goes
+through local_frame (an Arrow LocalTableScan, never an RDD scan job).
 """
 
 from __future__ import annotations
@@ -44,6 +45,8 @@ from collections import Counter
 from dataclasses import dataclass
 
 import numpy as np
+import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
@@ -82,6 +85,19 @@ def _terms(text_or_terms) -> list[str]:
             if isinstance(text_or_terms, str) else list(text_or_terms))
 
 
+def local_frame(spark, rows, schema) -> DataFrame:
+    """Final, ordered driver-side rows (a pandas frame or a list of tuples)
+    -> a LocalTableScan of `schema` (StructType or DDL), built through
+    Arrow: collect() runs no Spark job and keeps the row order. (Tuple
+    lists and empty pandas frames would plan an RDD scan job.)"""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    rows = (rows[schema.names] if isinstance(rows, pd.DataFrame)
+            else pd.DataFrame(rows, columns=schema.names))
+    return spark.createDataFrame(
+        pa.Table.from_pandas(rows, preserve_index=False), schema)
+
+
 def _bm25_params(index: Index) -> tuple:
     """(n_docs, avgdl, k1, b) — the scalars every BM25 kernel closes over."""
     return index.stats.n_docs, index.stats.avgdl, index.k1, index.b
@@ -113,8 +129,6 @@ def _score_query_group(pdf, q: Query, n_docs: int, avgdl: float, k1: float,
     asc). Implements MAXSCORE with block skipping (see module docstring).
     For mode=and, every distinct query term must have blocks in `pdf`
     (_score_blocks_pd applies that rule)."""
-    import pandas as pd
-
     k, mode = q.k, q.mode
 
     # per (term,salt) posting lists, with per-term query weight + global df
@@ -224,8 +238,6 @@ def _score_query_group(pdf, q: Query, n_docs: int, avgdl: float, k1: float,
 def _ids_pd(blocks):
     """docID-gap decode of posting-block rows -> pandas (doc_id, term), one
     row per posting — no tf/norm decode, no BM25."""
-    import pandas as pd
-
     counts = blocks["n_in_block"].to_numpy(dtype=np.int64)
     ids, _, _ = codec.decode_blocks_concat(
         blocks["first_doc_id"].to_numpy(), blocks["docid_gaps"], counts)
@@ -241,8 +253,8 @@ def _ids_pd(blocks):
 def _queries_df(index: Index, queries: list[Query]):
     rows = [(q.query_id, term, float(mult))
             for q in queries for term, mult in Counter(q.terms).items()]
-    return index.postings.sparkSession.createDataFrame(
-        rows, "query_id long, term string, weight double")
+    return local_frame(index.postings.sparkSession, rows,
+                       "query_id long, term string, weight double")
 
 
 def term_meta(index: Index, terms: list[str]) -> dict[str, int]:
@@ -300,33 +312,40 @@ def _candidates(index: Index, queries: list[Query]) -> DataFrame:
 LOCAL_MAX_POSTINGS = 2_000_000
 
 
+def _strategy(index: Index, queries: list[Query], method: str = "auto") -> str:
+    """'local' or 'distributed': the strategy `method` runs `queries` with.
+    auto is local while the total candidate postings Σ_q Σ_{t∈q} df(t),
+    served from the term_meta cache, stay <= LOCAL_MAX_POSTINGS."""
+    if method not in ("auto", "local", "distributed", "gather"):
+        raise ValueError(f"unknown search method {method!r}")
+    if method == "auto":
+        meta = term_meta(index, sorted({t for q in queries for t in q.terms}))
+        est = sum(meta[t] for q in queries for t in set(q.terms))
+        method = "local" if est <= LOCAL_MAX_POSTINGS else "distributed"
+    return "local" if method == "local" else "distributed"
+
+
 def search_many(index: Index, queries: list[Query], method: str = "auto") -> DataFrame:
     """Batch top-k search: N queries -> (query_id, doc_id, score).
 
     Physical strategies (ES query-then-fetch analogs, auto-selected by
     Σ df over the query terms; see the module docstring):
       local        — the driver-side block read (_local_blocks_pandas)
-                     scored by MAXSCORE in process: no Spark job on a
-                     committed segment once the dictionary is warm, one
-                     narrow scan job on an in-memory one.
+                     scored by MAXSCORE in process, an ordered local_frame:
+                     no Spark job on a committed segment once the
+                     dictionary is warm, one narrow scan job in memory.
       distributed  — decode+score per partition, shuffle (doc,query) grain,
                      window top-k. For hot terms / huge candidate sets.
     "gather" names a deleted one-task-per-query strategy (slower than
     distributed on the measured hot batches, BENCH/PLANS.md); it is kept
     as another name for distributed. Any other method raises ValueError.
     """
-    if method not in ("auto", "local", "distributed", "gather"):
-        raise ValueError(f"unknown search method {method!r}")
+    run = (_search_local if _strategy(index, queries, method) == "local"
+           else _search_distributed)
     queries = [q for q in queries if q.terms]
     if not queries:
-        return index.postings.sparkSession.createDataFrame([], HIT_SCHEMA)
-
-    if method == "auto":
-        est = _estimate_postings(index, queries)
-        method = "local" if est <= LOCAL_MAX_POSTINGS else "distributed"
-    if method == "local":
-        return _search_local(index, queries)
-    return _search_distributed(index, queries)
+        return local_frame(index.postings.sparkSession, [], HIT_SCHEMA)
+    return run(index, queries)
 
 
 def _local_blocks_pandas(index: Index, terms: list[str]):
@@ -340,12 +359,10 @@ def _local_blocks_pandas(index: Index, terms: list[str]):
     statistics — the same pruning the Spark plan does, minus the job.
     ZERO Spark jobs (the 0.2-0.4 s selective-query floor was job dispatch
     around a scan that lands on the driver anyway). In-memory segments
-    take one narrow collect of the same pruned scan (Index.term_rows)."""
-    import pandas as pd
-
+    take one narrow Arrow toPandas() of the same pruned scan
+    (Index.term_rows); both decode their binary block columns alike."""
     if index.disk_path is None:
-        rows = index.term_rows("postings", terms).select(*BLOCK_COLS).collect()
-        return pd.DataFrame([tuple(r) for r in rows], columns=BLOCK_COLS)
+        return index.term_rows("postings", terms).select(*BLOCK_COLS).toPandas()
     scanner = index.term_scanner("postings", terms, BLOCK_COLS)
     if scanner is None:
         return pd.DataFrame(columns=BLOCK_COLS)
@@ -356,8 +373,6 @@ def _score_blocks_pd(index: Index, blocks, queries: list[Query]):
     """MAXSCORE per query over a driver-side frame of candidate block rows
     -> pandas hits (query_id, doc_id, score), ordered by query_id, then
     (score desc, doc_id asc)."""
-    import pandas as pd
-
     bm25 = _bm25_params(index)
     outs = []
     for q in sorted(queries, key=lambda q: q.query_id):
@@ -376,7 +391,7 @@ def _score_blocks_pd(index: Index, blocks, queries: list[Query]):
 
 def _search_local(index: Index, queries: list[Query]) -> DataFrame:
     """Local strategy: the driver-side block read + in-process MAXSCORE
-    -> a small local DataFrame of top-k rows.
+    -> a local relation of top-k rows (local_frame), already ordered.
 
     The query relation is NOT joined in (unlike the distributed path):
     the blocks land on the driver anyway, so per-query tagging is a
@@ -384,7 +399,7 @@ def _search_local(index: Index, queries: list[Query]) -> DataFrame:
     selective-query latency (r03 measurement: ~0.4 s at sf0.1)."""
     terms = sorted({t for q in queries for t in q.terms})
     hits = _score_blocks_pd(index, _local_blocks_pandas(index, terms), queries)
-    return index.postings.sparkSession.createDataFrame(hits, schema=HIT_SCHEMA)
+    return local_frame(index.postings.sparkSession, hits, HIT_SCHEMA)
 
 
 def search_interactive(index: Index, text_or_terms, k: int = 10,
@@ -398,18 +413,10 @@ def search_interactive(index: Index, text_or_terms, k: int = 10,
     Past LOCAL_MAX_POSTINGS the query runs on the executors through
     search() (hot terms belong there — the same cap as search_many)."""
     q = Query(0, _terms(text_or_terms), k, mode)
-    if _estimate_postings(index, [q]) > LOCAL_MAX_POSTINGS:
+    if _strategy(index, [q]) == "distributed":
         return search(index, q.terms, k=k, mode=mode).toPandas()
     hits = _score_blocks_pd(index, _local_blocks_pandas(index, q.terms), [q])
     return hits[["doc_id", "score"]]
-
-
-def _estimate_postings(index: Index, queries: list[Query]) -> int:
-    """Total candidate postings across queries: Σ_q Σ_{t∈q} df(t).
-    Served from the term_meta cache (shares its one lookup job)."""
-    terms = sorted({t for q in queries for t in q.terms})
-    meta = term_meta(index, terms)
-    return sum(meta[t] for q in queries for t in set(q.terms))
 
 
 def _scored_postings(cand: DataFrame, index: Index) -> DataFrame:
@@ -420,8 +427,6 @@ def _scored_postings(cand: DataFrame, index: Index) -> DataFrame:
     n_docs, avgdl, k1, b = _bm25_params(index)
 
     def decode_score(batches):
-        import pandas as pd
-
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -449,7 +454,8 @@ def _match_scores(index: Index, queries: list[Query]) -> DataFrame:
     holds `need` distinct query terms (all of them for mode=and, one for
     or) — read from a broadcast (query_id, need, k) relation, not carried
     on the posting rows."""
-    spec = index.postings.sparkSession.createDataFrame(
+    spec = local_frame(
+        index.postings.sparkSession,
         [(q.query_id, len(set(q.terms)) if q.mode == "and" else 1, q.k)
          for q in queries], "query_id long, need int, k int")
     agg = (_scored_postings(_candidates(index, queries), index)
@@ -475,10 +481,14 @@ def _search_distributed(index: Index, queries: list[Query]) -> DataFrame:
 
 def search(index: Index, text_or_terms, k: int = 10, mode: str = "or",
            method: str = "auto") -> DataFrame:
-    """Single query -> DataFrame(doc_id, score), top-k ordered."""
-    hits = search_many(index, [Query(0, _terms(text_or_terms), k, mode)],
-                       method=method)
-    return hits.select("doc_id", "score").orderBy(F.desc("score"), F.asc("doc_id"))
+    """Single query -> DataFrame(doc_id, score), top-k ordered (score desc,
+    doc_id asc): local hits are already ordered (no sort, no Spark job on
+    a committed segment); only distributed hits are sorted by Spark."""
+    q = Query(0, _terms(text_or_terms), k, mode)
+    if _strategy(index, [q], method) == "local":
+        return _search_local(index, [q]).select("doc_id", "score")
+    return (_search_distributed(index, [q]).select("doc_id", "score")
+            .orderBy(F.desc("score"), F.asc("doc_id")))
 
 
 def fetch(index: Index, hits: DataFrame, verify_sha: bool = True) -> DataFrame:
@@ -556,13 +566,13 @@ def search_bool_full(index: Index, plan) -> DataFrame:
                        | set(plan.must_not) | set(plan.filter))
     spark = index.postings.sparkSession
     if not all_terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(spark, [], "doc_id long, score double")
     scored = _per_term_scored(index, all_terms)
 
-    from collections import Counter
     wm, ws = Counter(plan.must), Counter(plan.should)
     req = sorted(set(plan.must) | set(plan.filter))
-    clauses = spark.createDataFrame(
+    clauses = local_frame(
+        spark,
         [(t, float(wm.get(t, 0)), float(ws.get(t, 0)),
           t in set(req), t in set(plan.must_not)) for t in all_terms],
         "term string, w_must double, w_should double, "
@@ -648,7 +658,7 @@ def search_tree(index: Index, node, k: int = 10) -> DataFrame:
     spark = index.postings.sparkSession
     all_terms = sorted(pplan.tree_terms(node))
     scored = (_per_term_scored(index, all_terms) if all_terms
-              else spark.createDataFrame([], "doc_id long, term string, score double"))
+              else local_frame(spark, [], "doc_id long, term string, score double"))
 
     def eval_node(n) -> DataFrame:
         if isinstance(n, pplan.MatchNode):
@@ -702,14 +712,6 @@ def search_tree(index: Index, node, k: int = 10) -> DataFrame:
     return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
-def search_query_string(index: Index, qs: str, k: int = 10) -> DataFrame:
-    """query_string front-end: mini-language -> tree -> search_tree.
-    Reference: index/query/QueryStringQueryBuilder.java."""
-    from . import plan as pplan
-
-    return search_tree(index, pplan.parse_query_string(qs), k=k)
-
-
 def search_multi_match(field_indexes: dict[str, "Index"],
                        text: str, k: int = 10, match_type: str = "best_fields",
                        tie_breaker: float = 0.0,
@@ -755,7 +757,7 @@ def search_boosting(index: Index, positive: str, negative: str,
     neg_terms = sorted(set(analysis.analyze(negative)))
     spark = index.postings.sparkSession
     if not pos_terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(spark, [], "doc_id long, score double")
     pos = (_per_term_scored(index, pos_terms)
            .groupBy("doc_id").agg(F.sum("score").alias("score")))
     if neg_terms:
@@ -849,7 +851,7 @@ def search_multi_match_cross(field_indexes: dict[str, "Index"],
     idxs = list(field_indexes.values())
     spark = idxs[0].postings.sparkSession
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(spark, [], "doc_id long, score double")
     n_docs = idxs[0].stats.n_docs
     field_df = {fname: term_meta(fidx, terms)
                 for fname, fidx in field_indexes.items()}
@@ -873,7 +875,7 @@ def search_multi_match_cross(field_indexes: dict[str, "Index"],
         per_field.append(scored.select(
             "doc_id", "term", (F.col("score") * scale).alias("fscore")))
     if not per_field:  # no query term present in ANY field index
-        return spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(spark, [], "doc_id long, score double")
     u = per_field[0]
     for rel in per_field[1:]:
         u = u.unionByName(rel)
@@ -900,7 +902,7 @@ def search_fuzzy(index: Index, term: str, max_dist: int = 2,
            .orderBy(F.asc("dist"), F.asc("term"))
            .limit(max_expansions).collect())
     if not exp:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(spark, [], "doc_id long, score double")
     weights = {r["term"]: 1.0 - r["dist"] / float(len(term)) for r in exp}
     scored = _per_term_scored(index, sorted(weights))
     w = F.lit(0.0)
@@ -934,8 +936,8 @@ def _multi_term_rewrite(index: Index, term_pred,
            .orderBy(F.asc("term")).limit(max_expansions).collect())
     terms = sorted(r["term"] for r in exp)
     if not terms:
-        return index.postings.sparkSession.createDataFrame(
-            [], "doc_id long, score double")
+        return local_frame(index.postings.sparkSession, [],
+                           "doc_id long, score double")
     return (_decoded_ids(index.term_rows("postings", terms)).select("doc_id")
             .distinct().withColumn("score", F.lit(1.0)).orderBy("doc_id"))
 
@@ -981,7 +983,7 @@ def count_matches(index: Index, text_or_terms, mode: str = "or") -> int:
     uniq = sorted(set(_terms(text_or_terms)))
     if not uniq:
         return 0
-    if _estimate_postings(index, [Query(0, uniq)]) <= LOCAL_MAX_POSTINGS:
+    if _strategy(index, [Query(0, uniq)]) == "local":
         ids = _ids_pd(_local_blocks_pandas(index, uniq))["doc_id"].to_numpy()
         # a doc holds each term at most once: its row count = terms matched
         _, n = np.unique(ids, return_counts=True)

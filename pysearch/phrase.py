@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import analysis, store
+from .exec import local_frame
 from .registry import Entry, tbl
 
 REGISTRY: dict[str, Entry] = {}
@@ -159,8 +160,8 @@ def _phrase_pair(t0: str, t1: str, slop: int):
     bucket files):
       local — the driver reads both terms' (doc_id, poss) array rows
               (bucket+term pruned) with pyarrow; the per-doc position
-              intersection runs in-process. ES's coordinator gather for
-              selective phrases.
+              intersection runs in-process, returned doc_id-ordered as a
+              local relation (exec.local_frame). Zero Spark jobs.
       join  — the two terms' array rows join on doc_id (both sides
               bucket-pruned, the smaller broadcast by AQE) and the pair
               count is pure array arithmetic — ExactPhraseMatcher's
@@ -174,19 +175,14 @@ def _phrase_pair(t0: str, t1: str, slop: int):
         pdf = _pair_rows_pandas(spark, sf_dir, t0, t1)
         if pdf is False:                       # probed hot: distributed join
             return _phrase_pair_join(spark, sf_dir, t0, t1, slop)
-        rows = [(r.term, int(r.doc_id), list(r.poss))
-                for r in pdf.itertuples(index=False)]
-        first = {doc: poss for term, doc, poss in rows if term == t0}
-        out = sorted(
-            (doc, n)
-            for term, doc, poss in rows if term == t1
-            and (p0 := first.get(doc)) is not None
-            and (n := _pair_count(p0, poss, slop)) > 0)
-        # already sorted; createDataFrame preserves local row order —
-        # an orderBy here would shuffle k rows across 32 partitions
-        # (measured ~0.8 s of pure overhead on a 1-row relation)
-        return spark.createDataFrame(
-            out, "doc_id long, n_occurrences long")
+        a, b = (pdf.loc[pdf["term"] == t, ["doc_id", "poss"]] for t in (t0, t1))
+        pairs = a.merge(b, on="doc_id", suffixes=("0", "1")).sort_values("doc_id")
+        pairs["n_occurrences"] = [_pair_count(p0, p1, slop) for p0, p1
+                                  in zip(pairs["poss0"], pairs["poss1"])]
+        # sorted by doc_id here and local_frame keeps the order: no
+        # orderBy (a Spark sort of these rows runs range-partition jobs)
+        return local_frame(spark, pairs[pairs["n_occurrences"] > 0],
+                           "doc_id long, n_occurrences long")
     return run
 
 
@@ -299,7 +295,7 @@ def _mm_phrase(t0: str, t1: str, k: int):
                                ).alias("fscore")))
             per_field.append(scored)
         if not per_field:
-            return spark.createDataFrame([], "doc_id long, score double")
+            return local_frame(spark, [], "doc_id long, score double")
         u = per_field[0]
         for rel in per_field[1:]:
             u = u.unionByName(rel)

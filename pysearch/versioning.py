@@ -50,9 +50,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import build, merge, store
+from . import exec as pexec
 from .build import Index, Stats
 from .registry import Entry
 
@@ -124,8 +126,8 @@ def update_doc(view: IndexView, doc_id: int, new_content: str) -> IndexView:
         k1=idx.k1, b=idx.b, cache=False, with_positions=with_positions)
     merged = merge.merge_indexes(spark, [idx, delta])
     if with_positions:
-        delta_pos = spark.createDataFrame(delta.positions.collect(),
-                                          build.POSITIONS_SCHEMA)
+        delta_pos = pexec.local_frame(spark, delta.positions.toPandas(),
+                                      build.POSITIONS_SCHEMA)
         merged.positions = idx.positions.unionByName(delta_pos)
     return IndexView(index=merged,
                      deletes=view.deletes | {int(doc_id)},
@@ -138,24 +140,28 @@ def _drop_deleted(df: DataFrame, deletes: frozenset,
         return df
     if len(deletes) <= _ISIN_MAX_DELETES:
         return df.where(~F.col(col).isin(sorted(deletes)))
-    spark = df.sparkSession
-    dd = spark.createDataFrame([(int(d),) for d in sorted(deletes)],
-                               f"{col} long")
+    dd = pexec.local_frame(df.sparkSession,
+                           [(int(d),) for d in sorted(deletes)], f"{col} long")
     return df.join(dd, col, "left_anti")
 
 
 def search_view(view: IndexView, text_or_terms, k: int = 10,
                 mode: str = "or") -> DataFrame:
-    """Top-k BM25 over the LIVE docs of the view. Scores use the
-    PHYSICAL stats (deleted docs still count in df/N/avgdl — Lucene
-    pre-merge semantics); deleted docs are dropped from the candidate
-    ranking, never from the statistics. Over-fetching k + |deletes|
-    bounds the filtered top-k exactly (at most |deletes| ranked rows can
-    be removed)."""
-    from . import exec as pexec
-
-    hits = pexec.search(view.index, text_or_terms,
-                        k=k + len(view.deletes), mode=mode)
+    """Top-k BM25 over the LIVE docs of the view, ordered (score desc,
+    doc_id asc). Scores use the PHYSICAL stats (deleted docs still count
+    in df/N/avgdl — Lucene pre-merge semantics); deleted docs are dropped
+    from the candidate ranking, never from the statistics. Over-fetching
+    k + |deletes| bounds the filtered top-k exactly (at most |deletes|
+    ranked rows can be removed). Local hits are filtered in pandas (no
+    sort, no Spark job on a committed segment), distributed ones in Spark."""
+    idx = view.index
+    q = pexec.Query(0, pexec._terms(text_or_terms), k + len(view.deletes), mode)
+    if pexec._strategy(idx, [q]) == "local":
+        hits = pexec.search_interactive(idx, q.terms, k=q.k, mode=mode)
+        live = hits[~hits["doc_id"].isin(sorted(view.deletes))].head(k)
+        return pexec.local_frame(idx.docs.sparkSession, live,
+                                 "doc_id long, score double")
+    hits = pexec._search_distributed(idx, [q]).select("doc_id", "score")
     return (_drop_deleted(hits, view.deletes)
             .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
 
@@ -172,8 +178,6 @@ def compact(view: IndexView, *, cache: bool = True) -> Index:
 
     docs = _drop_deleted(idx.docs, deletes)
     if cache:
-        from pyspark import StorageLevel
-
         docs = docs.persist(StorageLevel.DISK_ONLY)
     srow = docs.agg(F.count("*").alias("n"),
                     F.coalesce(F.sum("dl"), F.lit(0)).alias("s")).collect()[0]
@@ -186,8 +190,6 @@ def compact(view: IndexView, *, cache: bool = True) -> Index:
     live = _drop_deleted(
         merge.decode_to_posting_rows(idx.postings), deletes)
     if cache:
-        from pyspark import StorageLevel
-
         live = live.persist(StorageLevel.DISK_ONLY)
     term_stats = build.with_n_salts(
         live.groupBy("term").agg(F.count("*").alias("df"), F.sum("tf").alias("cf")),
@@ -290,7 +292,6 @@ def merge_drops_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     deletes), then query WITHOUT any live-docs filter. The oracle scores
     the LIVE corpus from scratch — a retained deleted posting (or stale
     df/N) would shift every score and go red."""
-    from . import exec as pexec
     from . import oracle_sql as osql
 
     idx = store.cached(spark, ("versioning.compact", sf_dir.rstrip("/")),

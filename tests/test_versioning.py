@@ -106,9 +106,10 @@ def test_compact_scores_shift_like_forcemerge(spark, lifecycle):
 
 def test_updated_view_phrase_reads_persisted_positions(spark):
     """update_doc over a segment with positions keeps them (base ∪ delta
-    rows): a phrase leg over the updated view is a pruned positions scan
-    with no corpus re-tokenize, and it returns the docs the forward-index
-    fallback returns, the new version included."""
+    rows, the delta's a local relation): a phrase leg over the updated
+    view is a pruned positions scan with no corpus re-tokenize, and it
+    returns the docs the forward-index fallback returns, the new version
+    included."""
     import dataclasses
 
     from pysearch import exec as pexec
@@ -120,6 +121,9 @@ def test_updated_view_phrase_reads_persisted_positions(spark):
     view = versioning.update_doc(versioning.open_view(base), 3,
                                  v1_text + " updated merge sort handler")
     new_id = base.stats.n_docs  # fresh doc_id = max+1 = N
+    # the delta's positions are a local relation, not an RDD scan
+    pos_plan = view.index.positions._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in pos_plan and "ExistingRDD" not in pos_plan
 
     df = pexec._phrase_docs(view.index, ["merge", "sort"], 0)
     plan = df._jdf.queryExecution().executedPlan().toString()

@@ -134,8 +134,8 @@ def main() -> None:
         per_query[name] = round(time.time() - tq, 4)
 
     # interactive path (r05): single-query top-k entirely on the
-    # coordinator — pyarrow read of the pruned bucket dirs + in-process
-    # MAXSCORE, zero Spark jobs (exec.search_interactive; rank-identical
+    # coordinator — pyarrow read of the pruned bucket dirs + the in-process
+    # coordinator kernel, zero Spark jobs (exec.search_interactive; rank-identical
     # to the Spark path, pytest-pinned). This is the ES "2-8 ms term
     # query" shape; timed per query over the committed segment.
     interactive: dict[str, float] = {}

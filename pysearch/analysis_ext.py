@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import analysis
+from .exec import local_frame
 from .registry import Entry, tbl
 
 REGISTRY: dict[str, Entry] = {}
@@ -45,7 +46,7 @@ ORDER BY pos""")
 def analyze_api(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`_analyze` endpoint analog: tokenize a literal string, return
     (pos, term) rows — the debugging surface for the analysis chain."""
-    one = spark.createDataFrame([(_ANALYZE_SAMPLE,)], "txt string")
+    one = local_frame(spark, [(_ANALYZE_SAMPLE,)], "txt string")
     return (one.select(F.posexplode(analysis.tokens_expr(F.col("txt")))
                        .alias("pos", "term"))
             .orderBy("pos"))
@@ -273,7 +274,7 @@ def analyze_porter(spark: SparkSession, sf_dir: str) -> DataFrame:
     def stem_udf(s):
         return s.map(porter_stem)
 
-    words = spark.createDataFrame([(w,) for w in sorted(PORTER_SAMPLE)],
+    words = local_frame(spark, [(w,) for w in sorted(PORTER_SAMPLE)],
                                   "word string")
     return (words.select("word", stem_udf("word").alias("stem"))
             .orderBy("word"))
@@ -323,7 +324,7 @@ SELECT unnest(regexp_extract_all(f, '[a-z0-9]+')) AS term FROM folded""")
 def analyze_asciifolding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """asciifolding token filter: strip diacritics before tokenizing so
     'café' matches 'cafe' ([lucene dep] ASCIIFoldingFilter)."""
-    one = spark.createDataFrame([(_FOLD_SAMPLE,)], "txt string")
+    one = local_frame(spark, [(_FOLD_SAMPLE,)], "txt string")
     folded = F.translate(F.col("txt"), _FOLD_SRC, _FOLD_DST)
     return one.select(F.explode(
         F.regexp_extract_all(folded, F.lit("[a-z0-9]+"), F.lit(0))).alias("term"))
@@ -338,7 +339,7 @@ ORDER BY pos""")
 def analyze_shingle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """shingle token filter: word 2-shingles with positions (analysis-common
     ShingleTokenFilterFactory / [lucene dep] ShingleFilter)."""
-    one = spark.createDataFrame([(_ANALYZE_SAMPLE,)], "txt string")
+    one = local_frame(spark, [(_ANALYZE_SAMPLE,)], "txt string")
     arr = analysis.tokens_expr(F.col("txt"))
     sh = F.zip_with(F.slice(arr, 1, F.size(arr) - 1),
                     F.slice(arr, 2, F.size(arr) - 1),

@@ -12,17 +12,15 @@ job) or one narrow collect of the same bucket+term-pruned scan
 auto-selected by the Σdf estimate over the query terms (search_many):
 
   * 'local' (Σdf <= LOCAL_MAX_POSTINGS) — the driver-side block read,
-    scored in process by the numpy MAXSCORE/block-max kernel
-    (_score_query_group): terms are processed in descending max-impact
-    order; once the sum of remaining terms' upper bounds drops below the
-    running kth score, remaining terms can no longer introduce new
-    winners, so only blocks whose docID range intersects current
-    candidates are decoded (block skipping via the block_max/first_doc_id
-    impact metadata). Rank-identical to exhaustive scoring — verified in
-    tests. [lucene dep] WANDScorer / MaxScoreCache / ImpactsDISI;
-    collector TopScoreDocCollector#setMinCompetitiveScore. The
-    interactive single-query path (search_interactive) is this strategy
-    returning pandas.
+    scored in process by the one vectorized coordinator kernel
+    (_score_blocks_pd): every block row decoded once, every posting
+    scored once, then per query one np.unique + bincount segmented sum
+    over its terms' postings and the AND rule of _match_scores. A
+    single-term query decodes only the blocks whose block_max_score can
+    reach its top-k ([lucene dep] ImpactsDISI; collector
+    TopScoreDocCollector#setMinCompetitiveScore). Rank-identical to the
+    exhaustive oracle — verified in tests. The interactive single-query
+    path (search_interactive) is this strategy returning pandas.
 
   * 'distributed' — the one executor BM25 kernel (_scored_postings)
     decodes and scores posting rows per partition with mapInPandas
@@ -61,10 +59,9 @@ HIT_SCHEMA = T.StructType([
 
 TERM_DICT_CACHE_MAX = 200_000    # full term-dict driver cache below this vocab size
 
-# posting-block columns the scoring and counting kernels read
-BLOCK_COLS = ["term", "salt", "df", "block_id", "n_in_block", "first_doc_id",
-              "docid_gaps", "tfs_enc", "norms_enc", "block_max_tf",
-              "block_max_score"]
+# posting-block columns the coordinator scoring and counting kernels read
+BLOCK_COLS = ["term", "df", "n_in_block", "first_doc_id", "docid_gaps",
+              "tfs_enc", "norms_enc", "block_max_score"]
 
 
 @dataclass
@@ -120,119 +117,6 @@ def _topk(doc_ids: np.ndarray, scores: np.ndarray, k: int):
         doc_ids, scores = doc_ids[keep], scores[keep]
     order = np.lexsort((doc_ids, -scores))[:k]
     return doc_ids[order], scores[order]
-
-
-def _score_query_group(pdf, q: Query, n_docs: int, avgdl: float, k1: float,
-                       b: float):
-    """All posting blocks of query `q` (BLOCK_COLS + its per-term `weight`)
-    -> its top-k (query_id, doc_id, score), ordered (score desc, doc_id
-    asc). Implements MAXSCORE with block skipping (see module docstring).
-    For mode=and, every distinct query term must have blocks in `pdf`
-    (_score_blocks_pd applies that rule)."""
-    k, mode = q.k, q.mode
-
-    # per (term,salt) posting lists, with per-term query weight + global df
-    lists = []
-    for (term, _salt), g in pdf.groupby(["term", "salt"], sort=False):
-        g = g.sort_values("block_id")
-        idf = float(codec.bm25_idf(int(g["df"].iloc[0]), n_docs))
-        lists.append({
-            "term": term,
-            "weight": float(g["weight"].iloc[0]),
-            "idf": idf,
-            "first": g["first_doc_id"].to_numpy(),
-            "counts": g["n_in_block"].to_numpy(),
-            "gaps": g["docid_gaps"].tolist(),
-            "tfs": g["tfs_enc"].tolist(),
-            "norms": g["norms_enc"].tolist(),
-            "bms": g["block_max_score"].to_numpy(dtype=np.float64),
-        })
-
-    def decode_scores(lst, block_mask=None):
-        if block_mask is not None:
-            idx = np.nonzero(block_mask)[0]
-            firsts, counts = lst["first"][idx], lst["counts"][idx]
-            gaps = [lst["gaps"][i] for i in idx]
-            tfs_l = [lst["tfs"][i] for i in idx]
-            norms_l = [lst["norms"][i] for i in idx]
-        else:
-            firsts, counts = lst["first"], lst["counts"]
-            gaps, tfs_l, norms_l = lst["gaps"], lst["tfs"], lst["norms"]
-        ids, tfs, nrm = codec.decode_blocks_concat(
-            firsts, gaps, counts, tfs_l, norms_l)
-        dlq = codec.byte4_to_int(nrm)
-        sc = lst["idf"] * codec.bm25_tf_weight(tfs, dlq, avgdl, k1, b) * lst["weight"]
-        return ids, sc
-
-    if mode == "and":
-        # decode all, per-term doc sets; intersect ascending-df first
-        per_term: dict[str, list] = {}
-        for lst in lists:
-            ids, sc = decode_scores(lst)
-            per_term.setdefault(lst["term"], []).append((ids, sc))
-        term_arrays = []
-        for term, parts in per_term.items():
-            ids = np.concatenate([p[0] for p in parts])
-            sc = np.concatenate([p[1] for p in parts])
-            o = np.argsort(ids, kind="stable")
-            term_arrays.append((ids[o], sc[o]))
-        term_arrays.sort(key=lambda a: len(a[0]))
-        cur_ids, cur_sc = term_arrays[0]
-        for ids, sc in term_arrays[1:]:
-            pos = np.searchsorted(ids, cur_ids)
-            pos_c = np.minimum(pos, len(ids) - 1)
-            hit = ids[pos_c] == cur_ids
-            cur_ids, cur_sc = cur_ids[hit], cur_sc[hit] + sc[pos_c[hit]]
-        top_ids, top_sc = _topk(cur_ids, cur_sc, k)
-    else:
-        # MAXSCORE: process terms in descending max-contribution order
-        term_max: dict[str, float] = {}
-        for lst in lists:
-            m = float(lst["bms"].max() * lst["weight"]) if len(lst["bms"]) else 0.0
-            term_max[lst["term"]] = max(term_max.get(lst["term"], 0.0), m)
-        order = sorted(term_max, key=lambda t: -term_max[t])
-        remaining_ub = {
-            order[i]: sum(term_max[t] for t in order[i:]) for i in range(len(order))
-        }
-        acc_ids = np.zeros(0, dtype=np.int64)
-        acc_sc = np.zeros(0, dtype=np.float64)
-        by_term: dict[str, list] = {}
-        for lst in lists:
-            by_term.setdefault(lst["term"], []).append(lst)
-        theta = -np.inf
-        for term in order:
-            prune = remaining_ub[term] < theta  # new docs can no longer win
-            for lst in by_term[term]:
-                if prune and len(acc_ids):
-                    # block skipping: only blocks whose doc range may contain
-                    # a current candidate need decoding
-                    firsts = lst["first"]
-                    ends = np.append(firsts[1:], np.iinfo(np.int64).max)
-                    lo = np.searchsorted(acc_ids, firsts, side="left")
-                    hi = np.searchsorted(acc_ids, ends, side="left")
-                    mask = hi > lo
-                    if not mask.any():
-                        continue
-                    ids, sc = decode_scores(lst, mask)
-                    keep = np.isin(ids, acc_ids, assume_unique=False)
-                    ids, sc = ids[keep], sc[keep]
-                elif prune:
-                    continue
-                else:
-                    ids, sc = decode_scores(lst)
-                acc_ids = np.concatenate([acc_ids, ids])
-                acc_sc = np.concatenate([acc_sc, sc])
-                o = np.argsort(acc_ids, kind="stable")
-                acc_ids, acc_sc = acc_ids[o], acc_sc[o]
-                uids, inv = np.unique(acc_ids, return_inverse=True)
-                usc = np.zeros(len(uids))
-                np.add.at(usc, inv, acc_sc)
-                acc_ids, acc_sc = uids, usc
-            if len(acc_sc) >= k:
-                theta = np.partition(acc_sc, len(acc_sc) - k)[len(acc_sc) - k]
-        top_ids, top_sc = _topk(acc_ids, acc_sc, k)
-
-    return pd.DataFrame({"query_id": q.query_id, "doc_id": top_ids, "score": top_sc})
 
 
 def _ids_pd(blocks):
@@ -304,8 +188,8 @@ def _candidates(index: Index, queries: list[Query]) -> DataFrame:
 # Below this Σdf the candidate blocks are gathered to the DRIVER (pyarrow,
 # or one narrow scan job) and scored in numpy — the ES coordinator-gather
 # shape. The cap is a coordinator-memory knob, not a correctness bound: 2M
-# postings is ~16k encoded block rows (~tens of MB collected), decoded+
-# MAXSCOREd in well under a second, and beats the distributed path's
+# postings is ~16k encoded block rows (~tens of MB collected), decoded and
+# scored in well under a second, and beats the distributed path's
 # multi-job floor by ~7× (r03 measurement at 600k postings: 0.85 s local
 # vs 6.4 s distributed on local[8]). Truly hot terms at 10^12-doc scale
 # (billions of postings) still route to distributed via the estimate.
@@ -331,7 +215,9 @@ def search_many(index: Index, queries: list[Query], method: str = "auto") -> Dat
     Physical strategies (ES query-then-fetch analogs, auto-selected by
     Σ df over the query terms; see the module docstring):
       local        — the driver-side block read (_local_blocks_pandas)
-                     scored by MAXSCORE in process, an ordered local_frame:
+                     scored in process by the coordinator kernel
+                     (_score_blocks_pd; each term decoded once for the
+                     whole batch), an ordered local_frame:
                      no Spark job on a committed segment once the
                      dictionary is warm, one narrow scan job in memory.
       distributed  — decode+score per partition, shuffle (doc,query) grain,
@@ -369,29 +255,102 @@ def _local_blocks_pandas(index: Index, terms: list[str]):
     return scanner.to_table().to_pandas()
 
 
+def _decode_scored(cols: dict, rows, n_docs: int, avgdl: float, k1: float,
+                   b: float):
+    """Block rows `rows` of the column arrays `cols` -> (doc_ids, BM25
+    scores), one per posting in row order: one decode_blocks_concat call,
+    then idf(df) × the tf weight."""
+    counts = cols["n_in_block"][rows]
+    ids, tfs, norms = codec.decode_blocks_concat(
+        cols["first_doc_id"][rows], cols["docid_gaps"][rows], counts,
+        cols["tfs_enc"][rows], cols["norms_enc"][rows])
+    idf = np.repeat(codec.bm25_idf(cols["df"][rows], n_docs), counts)
+    return ids, idf * codec.bm25_tf_weight(
+        tfs, codec.byte4_to_int(norms), avgdl, k1, b)
+
+
+# relative slack of the block-max test: a block whose max ties the k-th
+# score is decoded (a tie can still win on doc_id)
+BLOCK_MAX_SLACK = 1e-9
+
+
+def _block_max_scored(cols: dict, rows, k: int, bm25: tuple):
+    """Block-max pruning of one term's block rows for a top-k ([lucene dep]
+    ImpactsDISI): decode, in descending block_max_score order, the smallest
+    prefix holding >= k postings; its k-th best score θ bounds the final
+    k-th from below, so of the other blocks only those whose block max
+    reaches θ can hold a winner and get decoded. A clause multiplicity
+    scales every score alike and leaves the mask as is. -> (doc_ids,
+    scores) of the decoded blocks."""
+    k, bms = max(k, 1), cols["block_max_score"]
+    rows = rows[np.argsort(-bms[rows], kind="stable")]
+    head = int(np.searchsorted(np.cumsum(cols["n_in_block"][rows]), k)) + 1
+    ids, sc = _decode_scored(cols, rows[:head], *bm25)
+    if head >= len(rows):
+        return ids, sc
+    theta = np.partition(sc, len(sc) - k)[len(sc) - k]
+    tail = rows[head:][bms[rows[head:]] >= theta * (1.0 - BLOCK_MAX_SLACK)]
+    if not len(tail):
+        return ids, sc
+    ids2, sc2 = _decode_scored(cols, tail, *bm25)
+    return np.concatenate([ids, ids2]), np.concatenate([sc, sc2])
+
+
 def _score_blocks_pd(index: Index, blocks, queries: list[Query]):
-    """MAXSCORE per query over a driver-side frame of candidate block rows
-    -> pandas hits (query_id, doc_id, score), ordered by query_id, then
-    (score desc, doc_id asc)."""
+    """The coordinator BM25 kernel: a driver-side frame of candidate block
+    rows -> pandas hits (query_id, doc_id, score), ordered by query_id,
+    then (score desc, doc_id asc).
+
+    Every block row is decoded once and every posting scored once, however
+    many queries name its term; the postings are grouped by term. Per
+    query, the postings of its distinct terms (weighted by clause
+    multiplicity) go through one np.unique and two bincounts: each doc's
+    score sum and matched-term count. A doc is kept when it holds `need`
+    terms (every distinct term for mode=and, one for or — the rule of
+    _match_scores), and _topk ranks the rest. A call that scores one
+    query of one distinct term decodes only the blocks that can hold its
+    top-k (_block_max_scored)."""
     bm25 = _bm25_params(index)
-    outs = []
-    for q in sorted(queries, key=lambda q: q.query_id):
-        mult = {t: float(m) for t, m in Counter(q.terms).items()}
-        g = blocks[blocks["term"].isin(mult)]
-        # the AND rule of _match_scores: a term without blocks matches no doc
-        if g["term"].nunique() >= (len(mult) if q.mode == "and" else 1):
-            outs.append(_score_query_group(
-                g.assign(weight=g["term"].map(mult)), q, *bm25))
-    if not outs:
-        return pd.DataFrame({"query_id": pd.Series(dtype="int64"),
-                             "doc_id": pd.Series(dtype="int64"),
-                             "score": pd.Series(dtype="float64")})
-    return pd.concat(outs, ignore_index=True)
+    queries = sorted(queries, key=lambda q: q.query_id)
+    cols = {c: blocks[c].to_numpy() for c in BLOCK_COLS}
+    spans: dict[str, tuple[int, int]] = {}     # term -> its postings
+    if not len(blocks):
+        ids = sc = np.zeros(0)
+    elif len(queries) == 1 and len(set(queries[0].terms)) == 1:
+        term = queries[0].terms[0]
+        ids, sc = _block_max_scored(
+            cols, np.flatnonzero(cols["term"] == term), queries[0].k, bm25)
+        spans[term] = (0, len(ids))
+    else:
+        terms, code = np.unique(cols["term"], return_inverse=True)
+        ids, sc = _decode_scored(cols, np.argsort(code, kind="stable"), *bm25)
+        n = np.bincount(code, weights=cols["n_in_block"]).astype(np.int64)
+        ends = np.cumsum(n)
+        spans = dict(zip(terms, zip(ends - n, ends)))
+    out = {"query_id": [np.zeros(0, np.int64)], "doc_id": [np.zeros(0, np.int64)],
+           "score": [np.zeros(0)]}
+    for q in queries:
+        mult = Counter(q.terms)
+        need = len(mult) if q.mode == "and" else 1
+        present = sorted(t for t in mult if t in spans)
+        if len(present) < need:
+            continue
+        docs, inv = np.unique(np.concatenate(
+            [ids[slice(*spans[t])] for t in present]), return_inverse=True)
+        tot = np.bincount(inv, minlength=len(docs), weights=np.concatenate(
+            [sc[slice(*spans[t])] * mult[t] for t in present]))
+        keep = np.bincount(inv, minlength=len(docs)) >= need
+        top_ids, top_sc = _topk(docs[keep], tot[keep], q.k)
+        out["query_id"].append(np.full(len(top_ids), q.query_id, np.int64))
+        out["doc_id"].append(top_ids)
+        out["score"].append(top_sc)
+    return pd.DataFrame({c: np.concatenate(v) for c, v in out.items()})
 
 
 def _search_local(index: Index, queries: list[Query]) -> DataFrame:
-    """Local strategy: the driver-side block read + in-process MAXSCORE
-    -> a local relation of top-k rows (local_frame), already ordered.
+    """Local strategy: the driver-side block read + the coordinator
+    kernel (_score_blocks_pd) -> a local relation of top-k rows
+    (local_frame), already ordered.
 
     The query relation is NOT joined in (unlike the distributed path):
     the blocks land on the driver anyway, so per-query tagging is a
@@ -404,9 +363,10 @@ def _search_local(index: Index, queries: list[Query]) -> DataFrame:
 
 def search_interactive(index: Index, text_or_terms, k: int = 10,
                        mode: str = "or"):
-    """Interactive single-query path: the local strategy returned as a
-    PANDAS frame (doc_id, score), ordered (score desc, doc_id asc) — the
-    ES coordinator's JSON-response analog; rank-identical to search()
+    """Interactive single-query path: the local strategy (pyarrow block
+    read + _score_blocks_pd, block-max pruned for a single term) returned
+    as a PANDAS frame (doc_id, score), ordered (score desc, doc_id asc) —
+    the ES coordinator's JSON-response analog; rank-identical to search()
     (pytest-pinned). Zero Spark jobs on a committed segment once the
     terms dictionary is warm.
 
@@ -422,26 +382,23 @@ def search_interactive(index: Index, text_or_terms, k: int = 10,
 def _scored_postings(cand: DataFrame, index: Index) -> DataFrame:
     """The executor BM25 kernel: query-tagged posting blocks (_candidates)
     -> (query_id, doc_id, term, score × weight), one row per posting.
-    One vectorized decode per Arrow batch over ALL its block rows (no
-    per-row Python — the r01 hot-path fix)."""
-    n_docs, avgdl, k1, b = _bm25_params(index)
+    One vectorized decode per Arrow batch over ALL its block rows
+    (_decode_scored, as on the coordinator; no per-row Python — the r01
+    hot-path fix)."""
+    bm25 = _bm25_params(index)
 
     def decode_score(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            counts = pdf["n_in_block"].to_numpy()
-            ids, tfs, nrm = codec.decode_blocks_concat(
-                pdf["first_doc_id"].to_numpy(), pdf["docid_gaps"],
-                counts, pdf["tfs_enc"], pdf["norms_enc"])
-            dlq = codec.byte4_to_int(nrm)
-            idf = np.repeat(codec.bm25_idf(pdf["df"].to_numpy(), n_docs), counts)
-            w = np.repeat(pdf["weight"].to_numpy(), counts)
+            cols = {c: pdf[c].to_numpy() for c in pdf.columns}
+            counts = cols["n_in_block"]
+            ids, sc = _decode_scored(cols, slice(None), *bm25)
             yield pd.DataFrame({
-                "query_id": np.repeat(pdf["query_id"].to_numpy(), counts),
+                "query_id": np.repeat(cols["query_id"], counts),
                 "doc_id": ids,
-                "term": np.repeat(pdf["term"].to_numpy(), counts),
-                "score": idf * codec.bm25_tf_weight(tfs, dlq, avgdl, k1, b) * w})
+                "term": np.repeat(cols["term"], counts),
+                "score": sc * np.repeat(cols["weight"], counts)})
 
     return cand.mapInPandas(
         decode_score,

@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from . import analysis, store
 from . import oracle_sql as osql
+from .exec import local_frame
 from .phrase import _POS_CTE, positions_table, term_doc_positions
 from .registry import Entry, tbl
 
@@ -261,7 +262,7 @@ def field_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
         for f in tbl(spark, sf_dir, t).schema.fields:
             s = f.dataType.simpleString()
             rows.append((t, f.name, _FC_SPARK_TYPES.get(s, s)))
-    return (spark.createDataFrame(rows, "idx string, field string, "
+    return (local_frame(spark, rows, "idx string, field string, "
                                         "es_type string")
             .orderBy("idx", "field"))
 

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import oracle_sql as osql
 from . import plan as pplan
+from .exec import local_frame
 from .registry import Entry
 
 REGISTRY: dict[str, Entry] = {}
@@ -273,7 +274,7 @@ def fuzz_filter_agg_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
                     for r in _fa_engine(spark, sf_dir, case).collect())
     # a NULL group (NULL events.value/ts) sorts first, as in the oracle
     rows.sort(key=lambda r: (r[0], r[1] is not None, r[1] or "", r[2]))
-    return (spark.createDataFrame(rows, "case_id int, grp string, metric double")
+    return (local_frame(spark, rows, "case_id int, grp string, metric double")
             .select("case_id", "grp",
                     F.round("metric", osql.ROUND_DIGITS).alias("metric")))
 
@@ -297,6 +298,6 @@ def fuzz_tree_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows.sort()
     # round in Spark (HALF_UP, same as every other key's F.round —
     # python round() is half-even and would diverge at exact .5s)
-    return (spark.createDataFrame(rows, "case_id int, doc_id long, score double")
+    return (local_frame(spark, rows, "case_id int, doc_id long, score double")
             .select("case_id", "doc_id",
                     F.round("score", osql.ROUND_DIGITS).alias("score")))

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .exec import local_frame
 from .registry import Entry, tbl
 
 REGISTRY: dict[str, Entry] = {}
@@ -109,7 +110,7 @@ def reindex_op(spark: SparkSession, sf_dir: str) -> DataFrame:
         back = spark.read.parquet(dst)
         row = back.agg(F.count("*").alias("n_reindexed"),
                        F.count_distinct("etype").alias("n_types")).collect()
-        return spark.createDataFrame(row, "n_reindexed long, n_types long")
+        return local_frame(spark, row, "n_reindexed long, n_types long")
     finally:
         shutil.rmtree(dst, ignore_errors=True)
 

@@ -26,6 +26,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import analysis
+from .exec import local_frame
 from .registry import Entry
 
 REGISTRY: dict[str, Entry] = {}
@@ -101,7 +102,7 @@ def sink_segments_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         assert m["status"] == "committed"
         n_terms = sum(r["n_terms"] for r in m["lineage"])
         n_postings = sum(r["n_postings"] for r in m["lineage"])
-        return spark.createDataFrame(
+        return local_frame(spark, 
             [(int(m["n_docs"]), int(m["sum_dl"]), int(n_terms),
               int(n_postings))],
             "n_docs long, sum_dl long, n_terms long, n_postings long")
@@ -139,6 +140,6 @@ def segment_merge_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_terms = merged.term_stats.count()
     n_postings = merged.postings.agg(
         F.coalesce(F.sum("n_in_block"), F.lit(0))).collect()[0][0]
-    return spark.createDataFrame(
+    return local_frame(spark, 
         [(int(n_diff), int(n_terms), int(n_postings))],
         "n_diff long, n_terms long, n_postings long")

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import analysis
+from .exec import local_frame
 from .registry import Entry, tbl
 
 REGISTRY: dict[str, Entry] = {}
@@ -74,7 +75,7 @@ def q_percolate(spark: SparkSession, sf_dir: str) -> DataFrame:
               .distinct())
     rule_rows = [(qid, t, msm) for qid, text, msm in PERC_QUERIES
                  for t in sorted(set(analysis.analyze(text)))]
-    rules = spark.createDataFrame(
+    rules = local_frame(spark, 
         rule_rows, "query_id long, term string, msm int")
     matched = (dterms.join(F.broadcast(rules), "term")
                .groupBy("doc_id", "query_id", "msm")

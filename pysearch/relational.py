@@ -25,6 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from . import analysis
+from .exec import local_frame
 from .registry import Entry, tbl
 
 REGISTRY: dict[str, Entry] = {}
@@ -686,13 +687,13 @@ def scroll_pit(spark: SparkSession, sf_dir: str) -> DataFrame:
         page1 = snap.orderBy("o_orderkey").limit(10).collect()
         last = page1[-1]["o_orderkey"] if page1 else None
         # the concurrent write the PIT must be isolated from
-        (spark.createDataFrame([(-1, 0.0), (-2, 0.0)],
+        (local_frame(spark, [(-1, 0.0), (-2, 0.0)],
                                "o_orderkey long, o_totalprice double")
          .write.mode("append").parquet(live))
         page2 = snap if last is None else snap.where(
             F.col("o_orderkey") > last)
         rows = page2.orderBy("o_orderkey").limit(10).collect()
-        return spark.createDataFrame(
+        return local_frame(spark, 
             rows, "o_orderkey long, o_totalprice double")
     finally:
         shutil.rmtree(live, ignore_errors=True)

@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import analysis
 from . import oracle_sql as osql
+from .exec import local_frame
 from .phrase import _POS_CTE
 from .registry import Entry, tbl
 
@@ -161,7 +162,7 @@ def q_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ES dedups a pinned doc out of the organic hits). The pin leg is a
     3-row broadcast existence join — no extra shuffle."""
     pins_local = [(doc_id, _PIN_FLOOR - i) for i, doc_id in enumerate(PIN_IDS)]
-    pins = spark.createDataFrame(pins_local, "doc_id long, score_raw double")
+    pins = local_frame(spark, pins_local, "doc_id long, score_raw double")
     docs = tbl(spark, sf_dir, "documents").select("doc_id")
     # existence check: pins are the broadcast build side of an inner join
     # (a left-semi with pins on the left can't broadcast the small side)

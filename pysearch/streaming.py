@@ -124,7 +124,7 @@ def streaming_ingest_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = (hits.select(
             "doc_id", F.round("score", osql.ROUND_DIGITS).alias("score"))
             .collect())
-        return spark.createDataFrame(rows, "doc_id long, score double")
+        return pexec.local_frame(spark, rows, "doc_id long, score double")
     finally:
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(out, ignore_errors=True)

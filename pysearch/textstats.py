@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from . import analysis
+from .exec import local_frame
 from .registry import Entry, tbl
 
 REGISTRY: dict[str, Entry] = {}
@@ -131,7 +132,7 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = tbl(spark, sf_dir, "documents")
     tok = d.select("doc_id",
                    F.explode(_raw_tokens_expr(F.col("text"))).alias("term"))
-    spark_lex = spark.createDataFrame(
+    spark_lex = local_frame(spark, 
         [(lang, w) for lang, ws in sorted(LANG_LEXICON.items()) for w in ws],
         "lang string, w string")
     hits = (tok.join(F.broadcast(spark_lex), tok.term == spark_lex.w)

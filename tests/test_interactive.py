@@ -1,6 +1,7 @@
 """Interactive coordinator path (r05 brief item 6): pyarrow read of the
-pruned posting bucket dirs + in-process MAXSCORE — rank-identical to the
-Spark path and zero Spark jobs once the terms dictionary is warm."""
+pruned posting bucket dirs + the in-process coordinator kernel —
+rank-identical to the Spark path and zero Spark jobs once the terms
+dictionary is warm."""
 
 import pytest
 

@@ -121,3 +121,21 @@ def test_local_batch_is_one_ordered_local_relation(spark, seg):
     empty = pexec.search_many(seg, [pexec.Query(0, [])])
     plan = empty._jdf.queryExecution().executedPlan().toString()
     assert empty.collect() == [] and "LocalTableScan" in plan
+
+
+@pytest.mark.parametrize("key", ["scroll_pit", "reindex"])
+def test_driver_built_rows_are_local_relations(spark, key):
+    """Registry keys that assemble their answer on the driver return it
+    through exec.local_frame: its collect() runs no Spark job and its plan
+    is a LocalTableScan, not an RDD scan of a tuple list."""
+    from pysearch.ingest import reindex_op
+    from pysearch.relational import scroll_pit
+
+    make = {"scroll_pit": scroll_pit, "reindex": reindex_op}[key]
+    sc = spark.sparkContext
+    df = make(spark, SF)
+    before = len(sc.statusTracker().getJobIdsForGroup(None))
+    rows = df.collect()
+    assert len(sc.statusTracker().getJobIdsForGroup(None)) == before, key
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert rows and "LocalTableScan" in plan and "ExistingRDD" not in plan, plan

@@ -1,6 +1,6 @@
 """End-to-end: Spark-built index answers rank-identical BM25 top-k vs the
 brute-force oracle (SURVEY §5.3), on the sf0.001 documents corpus, for both
-physical strategies (local MAXSCORE, distributed) and the "gather" name
+physical strategies (local coordinator kernel, distributed) and the "gather" name
 that selects distributed, with salting on."""
 
 import numpy as np

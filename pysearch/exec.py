@@ -39,6 +39,7 @@ through local_frame (an Arrow LocalTableScan, never an RDD scan job).
 
 from __future__ import annotations
 
+import functools
 from collections import Counter
 from dataclasses import dataclass
 
@@ -82,13 +83,20 @@ def _terms(text_or_terms) -> list[str]:
             if isinstance(text_or_terms, str) else list(text_or_terms))
 
 
+@functools.lru_cache(maxsize=None)
+def _ddl_schema(ddl: str) -> T.StructType:
+    """A DDL schema string parsed once per process (StructType.fromDDL is a
+    py4j round trip to the JVM's parser)."""
+    return T.StructType.fromDDL(ddl)
+
+
 def local_frame(spark, rows, schema) -> DataFrame:
     """Final, ordered driver-side rows (a pandas frame or a list of tuples)
     -> a LocalTableScan of `schema` (StructType or DDL), built through
     Arrow: collect() runs no Spark job and keeps the row order. (Tuple
     lists and empty pandas frames would plan an RDD scan job.)"""
     if isinstance(schema, str):
-        schema = T.StructType.fromDDL(schema)
+        schema = _ddl_schema(schema)
     rows = (rows[schema.names] if isinstance(rows, pd.DataFrame)
             else pd.DataFrame(rows, columns=schema.names))
     return spark.createDataFrame(

@@ -15,19 +15,25 @@ the postings), so the coordinator derives the partition-pruning
 predicate in pure Python (Index.bucket; build.py POSITIONS_SCHEMA;
 [lucene dep] Lucene84PostingsWriter's position stream next to the
 doc/freq stream). Every field (content, title) is its own catalog
-segment. A phrase [t0, t1] is a join of the two terms' bucket-pruned
-position rows on (doc_id, pos+1) — the
-ExactPhraseMatcher intersection, expressed relationally so Catalyst
-plans it. Queries NEVER re-tokenize documents (the r03 plan audit's one
-remaining scale-killer: posexplode of content at query time was a full
-corpus scan + tokenize per phrase query)."""
+segment. A phrase [t0, t1] intersects the two terms' bucket-pruned
+position rows per doc (ExactPhraseMatcher): below LOCAL_MAX_PAIR_ROWS on
+the coordinator — one pyarrow read of both legs and one numpy
+sorted-key intersection over the Arrow position lists, returned as a
+local relation — and past it as a Spark join on doc_id with array
+arithmetic over the position lists. Queries NEVER re-tokenize documents
+(the r03 plan audit's one remaining scale-killer: posexplode of content
+at query time was a full corpus scan + tokenize per phrase query)."""
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import analysis, store
-from .exec import local_frame
+from .exec import local_frame, term_meta
 from .registry import Entry, tbl
 
 REGISTRY: dict[str, Entry] = {}
@@ -92,38 +98,63 @@ def term_doc_positions(spark: SparkSession, sf_dir: str, term: str,
 # Below this many (term, doc) rows across both phrase legs, the bucket-
 # pruned position rows are read on the DRIVER (pyarrow, zero Spark jobs)
 # and intersected in-process — the same ES coordinator-gather shape (and
-# cap discipline) as exec.LOCAL_MAX_POSTINGS. The cap is probed with
-# pyarrow's count_rows under the term filter (narrow: reads only the
-# filter column's row groups) before the rows are read. Hot phrases fall
-# back to the distributed join below.
+# cap discipline) as exec.LOCAL_MAX_POSTINGS. The row count is known
+# before the read: a term's positions rows are its (term, doc) rows, so
+# it is the Σ df of the distinct legs from the terms dictionary
+# (exec.term_meta). Hot phrases fall back to the distributed join below.
 LOCAL_MAX_PAIR_ROWS = 200_000
 
+_PAIR_SCHEMA = pa.schema([("term", pa.string()), ("doc_id", pa.int64()),
+                          ("poss", pa.list_(pa.int32()))])
 
-def _pair_count(p0, p1, slop: int) -> int:
-    """Per-doc phrase frequency from two position lists — the Python
-    mirror of the array expressions in the distributed plan."""
-    if slop == 0:
-        s1 = set(p1)
-        return sum(1 for x in p0 if x + 1 in s1)
-    return sum(1 for x in p0 for y in p1 if x + 1 <= y <= x + 1 + slop)
+
+def _pair_count(rows, t0: str, t1: str, slop: int) -> pd.DataFrame:
+    """Per-doc phrase frequency of the leg rows (term, doc_id, poss) of
+    one pair — one vectorized sorted-key intersection for all docs (the
+    Python mirror of the array expressions in the distributed plan).
+
+    Each position is keyed doc_rank << 32 | pos (the rank, from
+    np.unique, keeps any doc_id from overflowing); the t1 keys are sorted
+    once and two searchsorted calls count the t1 positions in
+    [pos+1, pos+1+slop] of every t0 position. Returns the docs with a
+    match as (doc_id, n_occurrences), doc_id ascending."""
+    poss = rows.column("poss")
+    # list_value_length + list_flatten respect a sliced chunk's offset
+    # (a chunk's .values would not)
+    lens = pc.list_value_length(poss).to_numpy()
+    pos = pc.list_flatten(poss).to_numpy().astype(np.int64)
+    docs, rank = np.unique(rows.column("doc_id").to_numpy(), return_inverse=True)
+    rank = np.repeat(rank, lens)
+    key = (rank.astype(np.int64) << 32) | pos
+    term = rows.column("term")
+    is0, is1 = (np.repeat(pc.equal(term, t).to_numpy(zero_copy_only=False), lens)
+                for t in (t0, t1))
+    k0, k1 = key[is0], np.sort(key[is1])
+    # positions are < 2**31: a wider band would reach the next doc's keys
+    slop = min(slop, 2**31 - 1)
+    n = (np.searchsorted(k1, k0 + 1 + slop, side="right")
+         - np.searchsorted(k1, k0 + 1, side="left"))
+    per_doc = np.bincount(rank[is0], weights=n, minlength=len(docs)).astype(np.int64)
+    hit = per_doc > 0
+    return pd.DataFrame({"doc_id": docs[hit],
+                         "n_occurrences": per_doc[hit]})
 
 
 def _pair_rows_pandas(spark: SparkSession, sf_dir: str, t0: str, t1: str):
     """Coordinator pyarrow read of the two phrase legs' pruned position
     bucket dirs of the committed content segment (Index.term_scanner) —
     ZERO Spark jobs (the phrase sibling of exec._local_blocks_pandas).
-    Returns False when the pair is hot (caller uses the distributed
-    join), else a pandas frame of (term, doc_id, poss) rows."""
-    import pandas as pd
-
-    cols = ["term", "doc_id", "poss"]
-    scanner = store.segment_index(spark, sf_dir).term_scanner(
-        "positions", (t0, t1), cols)
-    if scanner is None:
-        return pd.DataFrame(columns=cols)
-    if scanner.count_rows() > LOCAL_MAX_PAIR_ROWS:
+    Returns False when the pair is hot (Σ df of the distinct legs past
+    LOCAL_MAX_PAIR_ROWS; the caller uses the distributed join), else the
+    pyarrow Table of (term, doc_id, poss) rows, poss still an Arrow list
+    column."""
+    idx = store.segment_index(spark, sf_dir)
+    if sum(term_meta(idx, sorted({t0, t1})).values()) > LOCAL_MAX_PAIR_ROWS:
         return False
-    return scanner.to_table().to_pandas()
+    scanner = idx.term_scanner("positions", (t0, t1), _PAIR_SCHEMA.names)
+    if scanner is None:
+        return _PAIR_SCHEMA.empty_table()
+    return scanner.to_table()
 
 
 def _phrase_pair_join(spark: SparkSession, sf_dir: str,
@@ -156,12 +187,14 @@ def _phrase_pair(t0: str, t1: str, slop: int):
     slop=0 → exact adjacency (pos1 == pos0+1); slop>0 → Lucene-sloppy-ish:
     t1 within (pos0+1 .. pos0+1+slop), order preserved.
 
-    Physical strategies (selected by a row-count probe on the pruned
-    bucket files):
-      local — the driver reads both terms' (doc_id, poss) array rows
-              (bucket+term pruned) with pyarrow; the per-doc position
-              intersection runs in-process, returned doc_id-ordered as a
-              local relation (exec.local_frame). Zero Spark jobs.
+    Physical strategies (selected by the legs' Σ df from the terms
+    dictionary against LOCAL_MAX_PAIR_ROWS):
+      local — the driver reads both terms' (term, doc_id, poss) rows
+              (bucket+term pruned) with pyarrow as one Arrow table
+              (_pair_rows_pandas); one numpy kernel (_pair_count)
+              intersects the position lists of all docs at once and
+              returns them doc_id-ordered as a local relation
+              (exec.local_frame). Zero Spark jobs.
       join  — the two terms' array rows join on doc_id (both sides
               bucket-pruned, the smaller broadcast by AQE) and the pair
               count is pure array arithmetic — ExactPhraseMatcher's
@@ -172,16 +205,12 @@ def _phrase_pair(t0: str, t1: str, slop: int):
               pairs (slop=0), and the aggregate-over-filter counts
               banded pairs."""
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        pdf = _pair_rows_pandas(spark, sf_dir, t0, t1)
-        if pdf is False:                       # probed hot: distributed join
+        rows = _pair_rows_pandas(spark, sf_dir, t0, t1)
+        if rows is False:                      # hot pair: distributed join
             return _phrase_pair_join(spark, sf_dir, t0, t1, slop)
-        a, b = (pdf.loc[pdf["term"] == t, ["doc_id", "poss"]] for t in (t0, t1))
-        pairs = a.merge(b, on="doc_id", suffixes=("0", "1")).sort_values("doc_id")
-        pairs["n_occurrences"] = [_pair_count(p0, p1, slop) for p0, p1
-                                  in zip(pairs["poss0"], pairs["poss1"])]
-        # sorted by doc_id here and local_frame keeps the order: no
+        # doc_id-ordered already and local_frame keeps the order: no
         # orderBy (a Spark sort of these rows runs range-partition jobs)
-        return local_frame(spark, pairs[pairs["n_occurrences"] > 0],
+        return local_frame(spark, _pair_count(rows, t0, t1, slop),
                            "doc_id long, n_occurrences long")
     return run
 

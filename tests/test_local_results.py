@@ -10,6 +10,7 @@ import os
 import pandas as pd
 import pytest
 from conftest import SF_SMOKE as SF
+from pyspark.sql import types as T
 
 from pysearch import analysis, phrase, store, versioning
 from pysearch import exec as pexec
@@ -108,6 +109,27 @@ def test_local_results_ordered_and_equal_oracle(spark, seg, view, deleted,
         key = ((lambda r: r[0]) if name.startswith("phrase")
                else (lambda r: (-r[1], r[0])))
         assert rows == sorted(rows, key=key), name
+
+
+def test_local_frame_parses_a_ddl_schema_once(spark, monkeypatch):
+    """local_frame parses each DDL schema string once per process
+    (StructType.fromDDL is a round trip to the JVM's parser); the frames
+    built from the cached schema are unchanged."""
+    calls = []
+    real = T.StructType.fromDDL
+
+    def counting(ddl):
+        calls.append(ddl)
+        return real(ddl)
+
+    monkeypatch.setattr(T.StructType, "fromDDL", staticmethod(counting))
+    ddl = "ddl_once_id long, ddl_once_score double"
+    frames = [pexec.local_frame(spark, [(1, 0.5), (2, 0.25)], ddl)
+              for _ in range(2)]
+    assert calls == [ddl]
+    for df in frames:
+        assert df.schema == real(ddl)
+        assert [tuple(r) for r in df.collect()] == [(1, 0.5), (2, 0.25)]
 
 
 def test_local_batch_is_one_ordered_local_relation(spark, seg):

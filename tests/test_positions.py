@@ -5,8 +5,10 @@ through write_index/load_index byte-identically with the query-side
 derivation."""
 
 import os
+import random
 import tempfile
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -192,10 +194,10 @@ def test_phrase_pyarrow_fast_path(spark):
     above the cap it signals the join fallback."""
     from pysearch import phrase
 
-    pdf = phrase._pair_rows_pandas(spark, SF_SMOKE, "merge", "sort")
-    assert pdf is not False, "fast path must engage below the cap"
-    got = {(r.term, int(r.doc_id), tuple(r.poss))
-           for r in pdf.itertuples(index=False)}
+    rows = phrase._pair_rows_pandas(spark, SF_SMOKE, "merge", "sort")
+    assert rows is not False, "fast path must engage below the cap"
+    got = {(r["term"], int(r["doc_id"]), tuple(r["poss"]))
+           for r in rows.to_pylist()}
     want = {(r["term"], r["doc_id"], tuple(r["poss"])) for r in
             _pair_rows_spark(spark, "merge", "sort").collect()}
     assert got == want
@@ -220,3 +222,117 @@ def test_mm_phrase_empty_when_term_absent(spark):
 
     out = _mm_phrase("zzqqxyzzy", "sort", 5)(spark, SF_SMOKE)
     assert out.count() == 0
+
+
+def test_positions_rows_per_term_equal_df(spark):
+    """A term's positions rows are its (term, doc) rows, so their count is
+    its df in term_stats: phrase._pair_rows_pandas bounds its read by the
+    legs' Σ df instead of counting the rows."""
+    from pysearch import store
+
+    seg = store.segment_index(spark, SF_SMOKE)
+    rows = {r["term"]: r["count"] for r in
+            seg.positions.groupBy("term").count().collect()}
+    df = {r["term"]: r["df"] for r in
+          seg.term_stats.select("term", "df").collect()}
+    assert rows and rows == df
+
+
+def _token_oracle(doc_tokens, t0, t1, slop):
+    """(doc_id, n_occurrences), doc_id ascending: t0 at i and t1 at
+    i+1..i+1+slop of a doc's post-analysis token stream."""
+    out = []
+    for d in sorted(doc_tokens):
+        toks = doc_tokens[d]
+        n = sum(toks[j] == t1 for i, t in enumerate(toks) if t == t0
+                for j in range(i + 1, min(i + 2 + slop, len(toks))))
+        if n:
+            out.append((d, n))
+    return out
+
+
+def test_phrase_local_join_oracle_differential(spark):
+    """Seeded differential on the catalog segment: for random term pairs
+    (adjacent bigrams, same-term pairs and unrelated pairs) at slop 0, 1
+    and 3, the local pair kernel, the distributed join and a token-stream
+    oracle (analysis.analyze, stopwords removed, as positions are built)
+    return identical rows."""
+    import pandas as pd
+
+    from pysearch import analysis, phrase
+
+    texts = pd.read_parquet(os.path.join(SF_SMOKE, "documents.parquet"))
+    doc_tokens = {int(d): analysis.analyze(t)
+                  for d, t in zip(texts["doc_id"], texts["text"])}
+    vocab = sorted({t for toks in doc_tokens.values() for t in toks})
+    bigrams = sorted({p for toks in doc_tokens.values()
+                      for p in zip(toks, toks[1:])})
+    rng = random.Random(20261020)
+    pairs = (rng.sample(bigrams, 24)
+             + [(t, t) for t in rng.sample(vocab, 8)]
+             + [tuple(rng.sample(vocab, 2)) for _ in range(10)])
+    assert len(pairs) >= 40
+
+    one_leg_only = 0
+    for t0, t1 in pairs:
+        d0, d1 = ({d for d, toks in doc_tokens.items() if t in toks}
+                  for t in (t0, t1))
+        one_leg_only += bool(d0 ^ d1)
+        for slop in (0, 1, 3):
+            want = _token_oracle(doc_tokens, t0, t1, slop)
+            local = [tuple(r) for r in
+                     phrase._phrase_pair(t0, t1, slop)(spark, SF_SMOKE).collect()]
+            join = [tuple(r) for r in phrase._phrase_pair_join(
+                spark, SF_SMOKE, t0, t1, slop).collect()]
+            assert local == want, (t0, t1, slop)
+            assert join == want, (t0, t1, slop)
+    assert one_leg_only, "no pair has docs that hold only one leg"
+
+
+@pytest.mark.parametrize("legs", [("merge", "zzqqxyzzy"),
+                                  ("zzqqxyzzy", "merge"),
+                                  ("zzqqxyzzy", "qqzzyxzzy")])
+def test_phrase_absent_leg_is_empty_local_relation(spark, legs):
+    from pysearch import phrase
+
+    df = phrase._phrase_pair(*legs, 0)(spark, SF_SMOKE)
+    assert df.collect() == []
+    assert "LocalTableScan" in _plan_of(df)
+
+
+def test_pair_count_wide_doc_ids_and_sliced_poss():
+    """The kernel on synthetic Arrow rows: doc_ids past 2**31 (the key
+    holds the doc's rank, not its id) and a poss chunk that is a slice of
+    a longer list array (non-zero offset), against a per-doc count."""
+    from pysearch import phrase
+
+    big = 2**31
+    docs = [big + 7, 3, big + 7, 3, 2**40, 2**40, 5]
+    terms = ["a", "a", "b", "b", "a", "b", "a"]
+    poss = [[0, 4, 9], [2], [1, 5, 6, 11], [3, 8], [10], [12], [1]]
+    full = pa.array([[99, 98]] * 2 + poss, type=pa.list_(pa.int32()))
+    sliced = full.slice(2)
+    assert sliced.offset == 2
+    rows = pa.table({"term": terms, "doc_id": pa.array(docs, pa.int64()),
+                     "poss": sliced})
+
+    def reference(t0, t1, slop):
+        legs = {}
+        for d, t, p in zip(docs, terms, poss):
+            legs.setdefault(d, {})[t] = p
+        out = []
+        for d in sorted(legs):
+            p0, p1 = legs[d].get(t0, []), legs[d].get(t1, [])
+            n = sum(1 for x in p0 for y in p1 if x + 1 <= y <= x + 1 + slop)
+            if n:
+                out.append((d, n))
+        return out
+
+    for t0, t1 in (("a", "b"), ("b", "a"), ("a", "a"), ("b", "b")):
+        for slop in (0, 1, 3):
+            got = phrase._pair_count(rows, t0, t1, slop)
+            assert list(got.columns) == ["doc_id", "n_occurrences"]
+            assert list(zip(got["doc_id"].tolist(),
+                            got["n_occurrences"].tolist())) \
+                == reference(t0, t1, slop), (t0, t1, slop)
+    assert reference("a", "b", 0) == [(3, 1), (big + 7, 2)]
